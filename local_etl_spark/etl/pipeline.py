@@ -1,8 +1,9 @@
 """Config-driven ETL pipeline (SURVEY.md §2.2 R1-R17, §3.4).
 
 One validated scan fans out to three sinks — output table(s), quarantine,
-error log — as filtered writes over a persisted DataFrame (the Spark
-mapping of the reference's per-row dual-sink routing, SURVEY.md §3.4).
+error log — as filtered writes over one locally checkpointed
+classification (the Spark mapping of the reference's per-row dual-sink
+routing, SURVEY.md §3.4).
 
 Scale design: the whole per-table flow is a single partitioned pass; no
 collect, no driver-side loops. Each event file is one row (the
@@ -21,11 +22,14 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
-from functools import lru_cache
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from dataclasses import dataclass
+from functools import cache, lru_cache
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from local_etl_spark.etl import transforms
 from local_etl_spark.etl.schema_translate import (
@@ -126,6 +130,14 @@ def _parse_event(raw: Column) -> Column:
         rewritten, r"([:,\[]\s*)NaN", '$1"\\\\u0000nan\\\\u0000"'
     )
     return F.coalesce(F.try_parse_json(raw), F.try_parse_json(rewritten))
+
+
+def parse_doc(raw: Column) -> Column:
+    """A whole-file document's variant: ``_parse_event`` behind the
+    ``is_valid_utf8`` guard (read_event_docs docstring). The batch scan
+    and the stream (streaming/etl_stream.py) both use it, so a document
+    takes the same class in either mode."""
+    return F.when(F.is_valid_utf8(raw), _parse_event(raw))
 
 
 def read_event_docs(spark: SparkSession, data_dir: str) -> DataFrame:
@@ -241,7 +253,7 @@ def read_event_docs(spark: SparkSession, data_dir: str) -> DataFrame:
     return scan.select(
         "file_path",
         raw.alias("raw"),
-        F.when(F.expr("is_valid_utf8(content)"), _parse_event(raw)).alias("v"),
+        parse_doc(raw).alias("v"),
     )
 
 
@@ -381,8 +393,8 @@ def classify(docs: DataFrame, schema: EnvelopeSchema) -> DataFrame:
          reference and blows janino's 64 KB method limit (the round-5
          regression: silent interpreted fallback of this projection);
       4. class/validity derived from error_msg (one copy of the CASE
-         instead of four), DROPPING the leaf columns so the persisted
-         classification stays slim (caching ~26 variant leaves per row
+         instead of four), DROPPING the leaf columns so the checkpointed
+         classification stays slim (storing ~26 variant leaves per row
          measurably slows materialization). The Python float-repr
          rewrite of the message's leading token also happens here —
          over the plain error_msg/token COLUMNS, so the big CASE is
@@ -390,18 +402,21 @@ def classify(docs: DataFrame, schema: EnvelopeSchema) -> DataFrame:
     """
     leaves = leaf_exprs(schema)
     val = compiled_validity_leaves(schema)
-    msg = F.col("error_msg")
-    staged = (
+    token, outputs = _classify_tail()
+    return (
         docs.select("*", *[c.alias(n) for n, c in leaves])
         .select("*", val.error_msg.alias("error_msg"))
-        .select(
-            *docs.columns,
-            "error_msg",
-            float_head_token(msg).alias("_msg_token"),
-        )
+        .select(*docs.columns, "error_msg", token)
+        .select(*docs.columns, *outputs)
     )
-    return staged.select(
-        *docs.columns,
+
+
+@cache
+def _classify_tail() -> tuple[Column, tuple[Column, ...]]:
+    """classify's schema-independent stages 3-4, built once per process
+    (each Column node is a Py4J round trip)."""
+    msg = F.col("error_msg")
+    return float_head_token(msg).alias("_msg_token"), (
         _pythonize_message(msg, F.col("_msg_token")).alias("error_msg"),
         F.when(F.col("v").isNull(), CLASS_CORRUPT)
         .when(msg.isNull(), CLASS_VALID)
@@ -640,6 +655,29 @@ def error_log_lines(invalid: DataFrame) -> DataFrame:
     )
 
 
+def _counted(docs: DataFrame, schema: EnvelopeSchema, obs: Observation) -> DataFrame:
+    """classify with the reference's counters (R15) riding on the
+    batch's one materializing job via observe() instead of a dedicated
+    count job."""
+    return classify(docs, schema).observe(
+        obs,
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.col("is_valid").cast("long")).alias("valid"),
+    )
+
+
+def _table_metrics(table: TableConfig, obs: Observation) -> TableMetrics:
+    got = obs.get
+    total = got["total"] or 0
+    valid = got["valid"] or 0
+    return TableMetrics(
+        table=table.name,
+        file_count=total,
+        valid_count=valid,
+        invalid_count=total - valid,
+    )
+
+
 def run_table(
     spark: SparkSession,
     cfg: PipelineConfig,
@@ -648,7 +686,7 @@ def run_table(
 ) -> TableMetrics:
     """Full per-table pipeline: scan → validate → route to sinks → counters.
 
-    One persisted classification feeds all sinks (SURVEY.md §3.4's
+    One checkpointed classification feeds all sinks (SURVEY.md §3.4's
     dual-sink fan-out): output rows are valid ∪ repairable-missing (R7),
     quarantine + error log get every invalid row (the reference copies
     the file and logs BEFORE deciding repairability, main.py:179-187).
@@ -657,42 +695,42 @@ def run_table(
     data_dir = cfg.path(table.data_dir)
     docs = read_event_docs(spark, data_dir)
     # one-doc-per-file corpora: target >=250 events per task so the fixed
-    # per-task cost of the 4 downstream sink jobs amortizes; cap at the
+    # per-task cost of the downstream sink jobs amortizes; cap at the
     # session's parallelism. At cluster scale the cap dominates (millions
     # of files -> full parallelism); the listing is a cheap local stat.
     docs = docs.coalesce(_scan_partitions(spark, data_dir))
-    # counters ride on the first sink write via observe() instead of a
-    # dedicated count job (R15 semantics, one fewer pass)
     obs = Observation(f"etl_metrics_{table.name}")
-    classified = (
-        classify(docs, schema)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col("is_valid").cast("long")).alias("valid"),
-        )
-        .persist()
-    )
+    write_sinks(cfg, table, schema, _counted(docs, schema, obs), version)
+    return _table_metrics(table, obs)
+
+
+@contextmanager
+def _checkpointed(classified: DataFrame):
+    """Materialize one classified batch ONCE and yield
+    ``(batch, n_invalid)``, where ``batch`` reads the stored rows.
+
+    One eager ``localCheckpoint`` job computes every partition, fires
+    any observe() counters the caller put on ``classified`` and counts
+    the invalid rows. Every DataFrame planned over ``batch`` then
+    carries a one-node plan instead of the ~40-branch classify tree,
+    so the analysis, planning and plan-string work of each sink's
+    execution is short. The blocks are released on exit.
+
+    Trade-off (as graph.py's per-round checkpoints): local-checkpoint
+    blocks live on the executors and cannot be recomputed, so losing an
+    executor mid-batch fails the run. run_table_incremental then fails
+    before its state commit, and its at-least-once contract re-processes
+    those files on the next run.
+    """
+    obs = Observation()
+    batch = classified.observe(
+        obs, F.sum((~F.col("is_valid")).cast("long")).alias("n_invalid")
+    ).localCheckpoint(eager=True)
     try:
-        # The first sink write materializes the cache AND fires the
-        # observe() counters (its filter sits above the cache node, so the
-        # job computes every partition); the remaining sinks then only pay
-        # render+commit over the warm cache. Folding materialization into
-        # the first sink instead of a dedicated count() action saves one
-        # full scan+classify pass (measured 1.9s -> 1.5s on the 2000-file
-        # corpus).
-        write_sinks(cfg, table, schema, classified, version)
-        got = obs.get
-        total = got["total"] or 0
-        valid = got["valid"] or 0
-        return TableMetrics(
-            table=table.name,
-            file_count=total,
-            valid_count=valid,
-            invalid_count=total - valid,
-        )
+        yield batch, obs.get["n_invalid"] or 0
     finally:
-        classified.unpersist()
+        # no public handle: the checkpoint RDD is the LogicalRDD's
+        batch._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def write_sinks(
@@ -706,30 +744,36 @@ def write_sinks(
 
     Shared by the batch pipeline (run_table) and the streaming ingest
     (streaming/etl_stream.py foreachBatch) — identical routing semantics
-    in both execution modes.
+    in both execution modes. The batch is materialized once
+    (_checkpointed) and every sink reads it.
     """
-    # ride the materializing first-sink job with an invalid-row counter
-    # (round 10): a CLEAN batch — the steady state of any production
-    # feed — then SKIPS the quarantine and error-log jobs entirely,
-    # which also matches the reference exactly (it creates errors.log /
-    # the mismatch dir lazily, only when an error occurs). The counter
-    # costs nothing: observe() folds into the job that computes the
-    # cache anyway.
-    sink_obs = Observation(f"etl_sink_{table.name}")
+    with _checkpointed(classified) as (batch, n_invalid):
+        _route(cfg, table, schema, batch, n_invalid, version)
+
+
+def _route(
+    cfg: PipelineConfig,
+    table: TableConfig,
+    schema: EnvelopeSchema,
+    batch: DataFrame,
+    n_invalid: int,
+    version: int,
+) -> None:
+    """Write the output, quarantine and error-log sinks of one
+    materialized batch as concurrent Spark jobs, so their fixed
+    scheduling + file-commit overhead overlaps.
+
+    A CLEAN batch (``n_invalid == 0``) — the steady state of any
+    production feed — skips the quarantine and error-log jobs entirely,
+    which also matches the reference exactly (it creates errors.log /
+    the mismatch dir lazily, only when an error occurs).
+    """
     keep = F.col("is_valid") | (
         F.lit(cfg.replace_missing_data)
         & (F.col("error_class") == CLASS_MISSING)
     )
-    # the metrics node lives ONLY under the FIRST sink's plan (an
-    # Observation is single-action: the later sinks' jobs must not
-    # re-fire it), and sits BELOW the keep-filter so it counts the
-    # full batch
-    kept_first = classified.observe(
-        sink_obs,
-        F.sum((~F.col("is_valid")).cast("long")).alias("n_invalid"),
-    ).where(keep)
-    kept = classified.where(keep)
-    invalid = classified.where(~F.col("is_valid"))
+    kept = batch.where(keep)
+    invalid = batch.where(~F.col("is_valid"))
 
     # Spark's CSV WRITER defaults ignoreLeading/TrailingWhiteSpace to
     # TRUE (the reader defaults them false) and silently trims values
@@ -766,45 +810,25 @@ def write_sinks(
         if df.columns:
             df.write.mode("append").options(**_verbatim).csv(path)
             return
-        # MUST derive from the PASSED df, not the `kept` closure: the
-        # first sink's df rides the observed plan (kept_first), and if
-        # this branch wrote `kept` instead, sink_obs would never see an
-        # action and sink_obs.get below would block forever (ADVICE
-        # r10). A zero-column frame still carries its row count and
-        # lineage, so selecting a literal yields one blank line per
-        # kept row over the same (observed) plan.
+        # a zero-column frame still carries its row count, so a literal
+        # yields one blank line per kept row
         df.select(F.lit("").alias("value")).write.mode("append").text(path)
         hdr = os.path.join(path, "part-00000")
         if not os.path.exists(hdr):
             with open(hdr, "w", encoding="utf-8") as fh:
                 fh.write("\n")
 
-    writes: list = []
-    # output sink(s) — the FIRST uses the observed plan (kept_first)
     if version == 1:
-        out1 = v1_rows(kept_first, schema)
-        writes.append(
-            lambda: _write_csv(
-                out1, cfg.path(table.output_file or f"{table.name}.csv")
-            )
-        )
+        sinks = [(v1_rows(kept, schema), table.output_file or f"{table.name}.csv")]
     else:
-        payload = v2_rows(kept_first, schema)[0]
-        metadata = v2_rows(kept, schema)[1]
-        writes.append(
-            lambda: _write_csv(
-                payload, cfg.path(table.payload_file or f"{table.name}.csv")
-            )
-        )
-        writes.append(
-            lambda: _write_csv(
-                metadata, cfg.path(table.metadata_file or "metadata.csv")
-            )
-        )
-
-    # error-path sinks, run ONLY when the batch has invalid rows (the
-    # reference's lazy-creation semantics — see sink_obs above):
-    # quarantine (R5): original documents, verbatim; error log (R6).
+        payload, metadata = v2_rows(kept, schema)
+        sinks = [
+            (payload, table.payload_file or f"{table.name}.csv"),
+            (metadata, table.metadata_file or "metadata.csv"),
+        ]
+    writes = [lambda df=df, p=p: _write_csv(df, cfg.path(p)) for df, p in sinks]
+    # error-path sinks: quarantine (R5): original documents, verbatim;
+    # error log (R6).
     # batch_seq (fuzz round 11, re-run axis): the reference's
     # shutil.copy OVERWRITES a same-named quarantine file, so on a
     # re-run where the bad file's bytes CHANGED the reference keeps
@@ -814,62 +838,40 @@ def write_sinks(
     # driver timestamp restores latest-wins determinism without
     # giving up the append-only sink (at scale it doubles as the
     # ingest-run audit column).
-    error_writes = [
-        lambda: invalid.select("file_path", "raw")
-        .withColumn("batch_seq", F.lit(time.time_ns()))
-        .write.mode("append")
-        .parquet(cfg.path(table.schema_mismatch_dir)),
-        lambda: error_log_lines(invalid)
-        .write.mode("append")
-        .text(cfg.path(f"{cfg.errors_log}.d")),
-    ]
+    if n_invalid:
+        writes += [
+            lambda: invalid.select("file_path", "raw")
+            .withColumn("batch_seq", F.lit(time.time_ns()))
+            .write.mode("append")
+            .parquet(cfg.path(table.schema_mismatch_dir)),
+            lambda: error_log_lines(invalid)
+            .write.mode("append")
+            .text(cfg.path(f"{cfg.errors_log}.d")),
+        ]
 
-    # Materialize-then-fan-out: the first sink job computes every
-    # partition into the persisted classification (its filter sits
-    # above the cache node, so the observe() counters fire over the
-    # full input); the remaining sinks are independent filtered
-    # warm-cache reads running as concurrent Spark jobs so their fixed
-    # scheduling + file-commit overhead overlaps.
-    # (Launching all four concurrently on a cold cache is still
-    # correct — racing jobs duplicate partition compute, never corrupt
-    # it — but measured 30% slower on the 2000-file corpus, and leaves
-    # counter coverage to whichever job wins.)
-    from concurrent.futures import ThreadPoolExecutor
-
-    # The wide render sink plans with whole-stage codegen OFF: under
-    # fusion ALL of a Project's renders land in ONE doConsume method
-    # and a 9-slot schema (cards) crosses janino's 64 KB limit — with
-    # repair-safe renders there is no narrowing to shrink them (round-9
-    # schema fuzz). Non-fused ProjectExec codegen splits per expression
-    # and compiles any slot count; measured cost on the 50k-row bench
-    # is within noise because the render job is commit-bound. Conf is
-    # restored before the concurrent small sinks (driver-side plan
-    # time only — the threaded writes plan after the restore).
+    # The sinks plan with whole-stage codegen OFF: under fusion ALL of
+    # a Project's renders land in ONE doConsume method and a 9-slot
+    # schema (cards) crosses janino's 64 KB limit — with repair-safe
+    # renders there is no narrowing to shrink them (round-9 schema
+    # fuzz). Non-fused ProjectExec codegen splits per expression and
+    # compiles any slot count; classify itself ran fused, in the
+    # checkpoint job. The conf is session-wide, so it is restored only
+    # after every sink has planned and run. The pool threads inherit
+    # the caller's local properties (job group, description), so the
+    # sink jobs belong to the caller's job.
     ws_key = "spark.sql.codegen.wholeStage"
-    spark = classified.sparkSession
-    # The FIRST sink write also materializes the classification cache
-    # (and fires run_table's observe() counters — its filter sits
-    # above the cache node, so the job computes every partition). A
-    # separate count() job was tried in round 9 to stage the cache
-    # under fused conf; measured round 10: non-fused classify
-    # materialization is within noise of fused (the ~40-branch CASE
-    # splits per expression and compiles), while the dedicated count
-    # job costs a full warm-cache pass (~0.24 s at 50 k rows) — so the
-    # sink write materializes directly, one job fewer per table.
+    spark = batch.sparkSession
     ws_old = spark.conf.get(ws_key, "true")
     spark.conf.set(ws_key, "false")
     try:
-        writes[0]()
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            for fut in [
+                pool.submit(inheritable_thread_target(spark)(w))
+                for w in writes
+            ]:
+                fut.result()
     finally:
         spark.conf.set(ws_key, ws_old)
-    # the materializing job has completed, so the batch's invalid
-    # count is known: a clean batch skips the two error-path jobs
-    if (sink_obs.get["n_invalid"] or 0) > 0:
-        writes += error_writes
-    if len(writes) > 1:
-        with ThreadPoolExecutor(max_workers=len(writes) - 1) as pool:
-            for fut in [pool.submit(w) for w in writes[1:]]:
-                fut.result()
 
 
 def run_pipeline(
@@ -893,51 +895,35 @@ def run_table_incremental(
     The reference re-reads and re-appends the ENTIRE directory every
     run (main.py:163-193 — re-running doubles the output CSV); this is
     the engine's fix. State = a parquet table of processed file paths
-    (one row per file — trivially small next to the data), anti-joined
-    against the scan listing. The production-scale form of the same
-    semantics is the Structured Streaming file source with a checkpoint
-    (streaming/etl_stream.py reuses write_sinks via foreachBatch); this
-    batch twin gives identical routing without a streaming runtime, and
-    the state table stays broadcast-sized up to millions of files.
+    (one row per file, one part file per run — trivially small next to
+    the data), anti-joined against the scan listing. The production-scale
+    form of the same semantics is the Structured Streaming file source
+    with a checkpoint (streaming/etl_stream.py reuses write_sinks via
+    foreachBatch); this batch twin gives identical routing without a
+    streaming runtime, and the state table stays broadcast-sized up to
+    millions of files.
     """
     schema = load_schema(cfg.path(table.schema_file))
     data_dir = cfg.path(table.data_dir)
     state_path = os.path.join(state_dir, f"{table.name}_seen_files")
     docs = read_event_docs(spark, data_dir)
     if os.path.exists(state_path):
-        seen = spark.read.parquet(state_path)
+        # the declared schema skips the footer-inference job
+        seen = spark.read.schema("file_path string").parquet(state_path)
         docs = docs.join(F.broadcast(seen), "file_path", "left_anti")
     docs = docs.coalesce(_scan_partitions(spark, data_dir))
     obs = Observation(f"etl_incr_metrics_{table.name}")
-    classified = (
-        classify(docs, schema)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col("is_valid").cast("long")).alias("valid"),
-        )
-        .persist()
-    )
-    try:
-        write_sinks(cfg, table, schema, classified, version)
+    with _checkpointed(_counted(docs, schema, obs)) as (batch, n_invalid):
+        _route(cfg, table, schema, batch, n_invalid, version)
         # commit the newly-processed file list AFTER the sinks succeed:
         # a crash before this append leaves files unrecorded → they are
         # re-processed next run (at-least-once into append sinks; flip
-        # the order for at-most-once)
-        classified.select("file_path").distinct().write.mode("append").parquet(
+        # the order for at-most-once). A scan lists each path once, so
+        # no distinct() is needed.
+        batch.select("file_path").coalesce(1).write.mode("append").parquet(
             state_path
         )
-        got = obs.get
-        total = got["total"] or 0
-        valid = got["valid"] or 0
-        return TableMetrics(
-            table=table.name,
-            file_count=total,
-            valid_count=valid,
-            invalid_count=total - valid,
-        )
-    finally:
-        classified.unpersist()
+    return _table_metrics(table, obs)
 
 
 def materialize_quarantine(spark: SparkSession, quarantine_dir: str, out_dir: str) -> int:

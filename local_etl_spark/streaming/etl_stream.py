@@ -23,6 +23,7 @@ from local_etl_spark.etl.pipeline import (
     PipelineConfig,
     TableConfig,
     classify,
+    parse_doc,
     write_sinks,
 )
 from local_etl_spark.etl.schema_translate import load_schema
@@ -31,7 +32,8 @@ from local_etl_spark.etl.schema_translate import load_schema
 def read_event_docs_stream(
     spark: SparkSession, data_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """Streaming twin of etl/pipeline.read_event_docs (R1/R2)."""
+    """Streaming twin of etl/pipeline.read_event_docs (R1/R2), with the
+    same document parse (``parse_doc``)."""
     reader = (
         spark.readStream.format("text")
         .option("wholetext", "true")
@@ -42,7 +44,7 @@ def read_event_docs_stream(
     return reader.load(data_dir).select(
         F.regexp_replace(F.input_file_name(), "^file:", "").alias("file_path"),
         F.col("value").alias("raw"),
-        F.try_parse_json(F.col("value")).alias("v"),
+        parse_doc(F.col("value")).alias("v"),
     )
 
 
@@ -65,11 +67,7 @@ def run_table_stream(
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        classified = classify(batch_df, schema).persist()
-        try:
-            write_sinks(cfg, table, schema, classified, version)
-        finally:
-            classified.unpersist()
+        write_sinks(cfg, table, schema, classify(batch_df, schema), version)
 
     return (
         docs.writeStream.foreachBatch(_process)

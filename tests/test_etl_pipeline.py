@@ -19,6 +19,10 @@ import pytest
 from local_etl_spark.etl.config import load_config, reference_config
 from local_etl_spark.etl.pipeline import materialize_quarantine, run_pipeline
 
+# repo-owned copies of the reference's two envelope schemas
+# (FIXTURES.md §1.1/§1.2, SURVEY.md §1.1)
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+
 USERS = {
     # file_name -> (doc-or-raw, expectation)
     "valid_2tok.json": {
@@ -112,7 +116,7 @@ def etl_run(spark, tmp_path_factory):
             with open(os.path.join(base, d, fn), "w", encoding="utf-8") as fh:
                 fh.write(doc if isinstance(doc, str) else json.dumps(doc, indent=2))
     for s in ("user-events-schema.json", "card-events-schema.json"):
-        shutil.copy(f"/root/reference/{s}", os.path.join(base, s))
+        shutil.copy(os.path.join(FIXTURES, s), os.path.join(base, s))
     cfg = reference_config(base)
     v2_metrics = run_pipeline(spark, cfg, version=2)
     v1_metrics = run_pipeline(spark, cfg, version=1)
@@ -245,22 +249,18 @@ metadata_file = "meta.csv"
     assert cfg.tables[0].payload_file == "users.csv"
 
 
-def test_incremental_processes_only_new_files(spark, tmp_path):
-    """Two incremental runs: run 2 sees only the delta files; run 3
-    (no new files) processes zero and appends nothing."""
+def users_corpus(tmp_path):
+    """A users table config over ``tmp_path/users`` and an
+    ``add_files(start, end)`` that lands events [start, end) of one
+    deterministic dirty stream (corrupt and repairable docs included),
+    so event ids never collide across batches."""
     from local_etl_spark.etl.corpus import generate, write_user_schema
-    from local_etl_spark.etl.pipeline import (
-        PipelineConfig,
-        TableConfig,
-        run_table_incremental,
-    )
+    from local_etl_spark.etl.pipeline import PipelineConfig, TableConfig
 
     data_dir = tmp_path / "users"
     data_dir.mkdir()
 
     def add_files(start: int, end: int) -> None:
-        # one deterministic event stream; [start, end) is the new batch,
-        # so event ids never collide across batches
         for i, raw in enumerate(generate(end, seed=11)):
             if i < start:
                 continue
@@ -285,6 +285,16 @@ def test_incremental_processes_only_new_files(spark, tmp_path):
         ),
         base_dir=str(out),
     )
+    return cfg, add_files
+
+
+def test_incremental_processes_only_new_files(spark, tmp_path):
+    """Two incremental runs: run 2 sees only the delta files; run 3
+    (no new files) processes zero and appends nothing."""
+    from local_etl_spark.etl.pipeline import run_table_incremental
+
+    cfg, add_files = users_corpus(tmp_path)
+    out = tmp_path / "out"
     state = str(tmp_path / "state")
 
     def payload_rows() -> list[dict]:
@@ -312,6 +322,58 @@ def test_incremental_processes_only_new_files(spark, tmp_path):
     # exactly-once per file: event_ids never repeat across runs
     ids = [r["event_id"] for r in rows]
     assert len(ids) == len(set(ids))
+
+
+def test_incremental_wave_job_count_and_state_shape(spark, tmp_path):
+    """A warm incremental wave's fixed cost is pinned in Spark jobs:
+    the seen-files broadcast, the one materializing checkpoint job, the
+    four sinks of a batch with invalid rows and the state append — 7.
+    The count runs through a job group, and no job of the wave may
+    escape it: the concurrent sink jobs inherit the caller's job group.
+    The seen-files state gets one parquet file per wave and each path
+    once, including the hidden and colon-named files of the
+    driver-listed side scan."""
+    import pyarrow.parquet as pq
+
+    from local_etl_spark.etl.pipeline import run_table_incremental
+
+    cfg, add_files = users_corpus(tmp_path)
+    data_dir = tmp_path / "users"
+    state = str(tmp_path / "state")
+    table = cfg.tables[0]
+    sc = spark.sparkContext
+
+    add_files(0, 30)
+    run_table_incremental(spark, cfg, table, state)
+
+    add_files(30, 60)
+    group = "etl-wave-job-count"
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup(group, "one incremental wave")
+    try:
+        m = run_table_incremental(spark, cfg, table, state)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert m.file_count == 30 and m.invalid_count > 0
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 7, sorted(jobs)
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+
+    add_files(60, 70)
+    doc = (data_dir / "ev00000.json").read_text()
+    (data_dir / "_x.json").write_text(doc)
+    (data_dir / "a:b.json").write_text(doc)
+    assert run_table_incremental(spark, cfg, table, state).file_count == 12
+
+    seen_dir = os.path.join(state, "users_seen_files")
+    parts = glob.glob(os.path.join(seen_dir, "*.parquet"))
+    assert len(parts) == 3
+    paths = [p for f in parts for p in pq.read_table(f)["file_path"].to_pylist()]
+    assert len(paths) == len(set(paths)) == 72
+    names = {os.path.basename(p) for p in paths}
+    assert {"_x.json", "a:b.json"} <= names
 
 
 def test_parse_event_rewrite_collision(spark):
@@ -486,7 +548,7 @@ def test_undecodable_bytes_classify_corrupt(spark, tmp_path):
         with open(d / "latin1.json", encoding="utf-8") as fh:
             json.load(fh)
 
-    schema = load_schema("/root/reference/user-events-schema.json")
+    schema = load_schema(os.path.join(FIXTURES, "user-events-schema.json"))
     rows = {
         os.path.basename(r["file_path"]): r
         for r in classify(read_event_docs(spark, str(d)), schema)
@@ -574,7 +636,7 @@ def test_deep_nesting_crash_class(spark, tmp_path):
     d = tmp_path / "users"
     d.mkdir()
     (d / "deep.json").write_text(doc, encoding="utf-8")
-    schema = load_schema("/root/reference/user-events-schema.json")
+    schema = load_schema(os.path.join(FIXTURES, "user-events-schema.json"))
     row = (
         classify(read_event_docs(spark, str(d)), schema)
         .select("error_class", "is_valid", "raw")

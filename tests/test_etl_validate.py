@@ -6,6 +6,7 @@ over an edge-case corpus covering every FIXTURES.md §1.4 path.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from hypothesis import given, settings
@@ -24,8 +25,9 @@ from pyspark.sql import functions as F
 from local_etl_spark.etl.schema_translate import load_schema
 from local_etl_spark.etl.validate import _pythonize_message, compile_validity
 
-USERS_SCHEMA = "/root/reference/user-events-schema.json"
-CARDS_SCHEMA = "/root/reference/card-events-schema.json"
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+USERS_SCHEMA = os.path.join(FIXTURES, "user-events-schema.json")
+CARDS_SCHEMA = os.path.join(FIXTURES, "card-events-schema.json")
 
 UMD = {"type": "user", "event_at": "2023-10-23 22:55:01", "event_id": "0a1b"}
 UPL = {"id": 945, "name": "Lawrence Welch", "address": "a\nb", "job": "x, y", "score": 0.86}
