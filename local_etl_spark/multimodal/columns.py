@@ -18,7 +18,20 @@ y4m) — a PPM produced here opens in any image viewer. Heavyweight
 codecs (JPEG/FLAC/H.264) would need external libraries; the container
 has none, and the *Spark-side* contract — BinaryType columns, Arrow
 batch transfer, mapInPandas fan-out, schema discipline — is identical
-whichever kernel sits inside the batch loop.
+whichever kernel sits inside the batch loop. Each container has one
+parser walk (_ppm_header, _riff_chunks, _y4m_frames) that every kernel
+reading that format shares.
+
+Kernels: every media kernel is a plain per-payload function
+``(doc_id, modality, raw_bytes) -> rows`` plus a declared output
+schema, run by the one Arrow adapter ``map_payloads`` (the pandas
+batch loop, column assembly and the single mapInPandas call). Each
+kernel declares the modality it reads once, with ``@_reads`` — None
+for kernels that emit rows for every payload (decode, frame
+sampling). The adapter drops other modalities' rows on arrival, and
+callers pass ``kernel.modality`` to ``synthesize_media`` so only
+those rows are built; no caller names a modality itself, so a
+pre-filter can never drop rows its kernel would have emitted.
 
 Scale notes: mapInPandas streams Arrow batches — one Python worker per
 core per partition, no driver involvement, and payload bytes cross to
@@ -34,7 +47,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -122,17 +135,17 @@ def synthesize_media(
 ) -> DataFrame:
     """Deterministic real-format media table from `documents`.
 
-    ``modality`` pre-filters the doc side to one modality's rows.
-    Modality is a pure function of doc_id (media_dims: doc_id % 3), so
-    a modality-specific consumer — image hashing, audio
-    fingerprinting, scene cuts — can skip synthesizing the other two
-    thirds entirely instead of paying full payload construction (video
-    frames are the most expensive to build) for rows its kernel drops
-    on arrival. Spark cannot push this filter below the opaque
-    mapInPandas itself (guide §2.3/§4.1 — project/filter before the
-    Python boundary), so the filter is applied to the INPUT relation;
-    the synthesized rows for the kept modality are byte-identical to
-    the unfiltered run's."""
+    ``modality`` pre-filters the doc side to one modality's rows;
+    callers pass the consuming kernel's declaration
+    (``kernel.modality``), never a literal. Modality is a pure function
+    of doc_id (media_dims: doc_id % 3), so a modality-specific kernel
+    — image hashing, audio fingerprinting, scene cuts — skips
+    synthesizing the two thirds it would drop on arrival (video frames
+    are the most expensive to build). Spark cannot push this filter
+    below the opaque mapInPandas itself (guide §2.3/§4.1 —
+    project/filter before the Python boundary), so the filter is
+    applied to the INPUT relation; the synthesized rows for the kept
+    modality are byte-identical to the unfiltered run's."""
 
     def gen(batches: Iterator["object"]) -> Iterator["object"]:
         import pandas as pd
@@ -155,6 +168,55 @@ def synthesize_media(
             F.pmod(F.col("doc_id"), F.lit(3)) == _MODALITY_IDX[modality]
         )
     return src.mapInPandas(gen, schema=MEDIA_SCHEMA)
+
+
+def map_payloads(
+    media: DataFrame,
+    fn: Callable[[int, str, bytes], list[tuple]],
+    schema: T.StructType,
+    modality: str | None = None,
+) -> DataFrame:
+    """The one Arrow adapter every media kernel runs through.
+
+    ``fn(doc_id, modality, raw_bytes)`` returns the output rows for one
+    payload as tuples in ``schema`` field order (zero, one or many —
+    the per-frame/per-window fan-out). Rows whose modality is not
+    ``modality`` are dropped before ``fn`` sees them (None keeps every
+    row). The adapter owns the pandas batch loop, column assembly and
+    the mapInPandas call."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator["object"]) -> Iterator["object"]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for doc_id, mod, payload in zip(
+                pdf["doc_id"], pdf["modality"], pdf["payload"]
+            ):
+                if modality is None or mod == modality:
+                    rows.extend(fn(doc_id, mod, bytes(payload)))
+            yield pd.DataFrame(rows, columns=names)
+
+    return media.mapInPandas(run, schema=schema)
+
+
+def _reads(modality: str | None) -> Callable:
+    """Declare the one modality a kernel reads as ``kernel.modality``:
+    the kernel hands it to map_payloads, and callers hand it to
+    synthesize_media."""
+
+    def declare(kernel: Callable) -> Callable:
+        kernel.modality = modality
+        return kernel
+
+    return declare
+
+
+def _signed64(u: int) -> int:
+    """Two's-complement form of an unsigned 64-bit hash (LongType
+    columns carry it for JVM-side xor/bit_count)."""
+    return u - (1 << 64) if u >= (1 << 63) else u
 
 
 def _ppm_header(raw: bytes) -> tuple[int, int, int]:
@@ -240,23 +302,38 @@ def dhash64(raw: bytes) -> int:
     return bits
 
 
+def _riff_chunks(raw: bytes) -> dict[bytes, bytes]:
+    """RIFF/WAVE chunk walk → {chunk id: body}; a repeated id keeps its
+    last body."""
+    if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE file")
+    pos, chunks = 12, {}
+    while pos + 8 <= len(raw):
+        size = struct.unpack("<I", raw[pos + 4 : pos + 8])[0]
+        chunks[raw[pos : pos + 4]] = raw[pos + 8 : pos + 8 + size]
+        pos += 8 + size + (size & 1)  # chunks are word-aligned
+    return chunks
+
+
+def _wav_pcm16(raw: bytes) -> tuple:
+    """PCM16 sample tuple of a RIFF/WAVE file's data chunk."""
+    data = _riff_chunks(raw).get(b"data")
+    if data is None:
+        raise ValueError("missing data chunk")
+    n = len(data) // 2
+    return struct.unpack("<%dh" % n, data[: 2 * n])
+
+
 def decode_wav(raw: bytes) -> dict:
     """Parse RIFF/WAVE: walk chunks, read fmt (PCM only), mean |sample|
     over the data chunk."""
-    if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(raw):
-        cid, size = raw[pos : pos + 4], struct.unpack("<I", raw[pos + 4 : pos + 8])[0]
-        body = raw[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
+    chunks = _riff_chunks(raw)
+    if b"fmt " not in chunks or b"data" not in chunks:
         raise ValueError("missing fmt/data chunk")
-    audio_fmt, n_ch, rate, _, _, bits = fmt
+    data = chunks[b"data"]
+    audio_fmt, n_ch, rate, _, _, bits = struct.unpack(
+        "<HHIIHH", chunks[b"fmt "][:16]
+    )
     if audio_fmt != 1 or bits != 16:
         raise ValueError("only PCM16 supported")
     n = len(data) // (2 * n_ch)
@@ -271,9 +348,10 @@ def decode_wav(raw: bytes) -> dict:
     }
 
 
-def decode_y4m(raw: bytes) -> dict:
-    """Parse YUV4MPEG2: stream-header params, then frame offsets walked
-    by exact 4:2:0 frame size (offset math, not marker search)."""
+def _y4m_frames(raw: bytes) -> tuple[int, int, list[bytes]]:
+    """YUV4MPEG2 walk: stream-header params, then each frame's 4:2:0
+    bytes, located by exact frame size (offset math, not marker
+    search) → (width, height, frames)."""
     nl = raw.index(b"\n")
     head = raw[:nl].split(b" ")
     if head[0] != b"YUV4MPEG2":
@@ -283,22 +361,30 @@ def decode_y4m(raw: bytes) -> dict:
     if params.get(b"C", b"420").startswith(b"420") is False:
         raise ValueError("only 4:2:0 supported")
     frame_len = w * h * 3 // 2
-    pos, frames, ysum, ycount = nl + 1, 0, 0, 0
+    pos, frames = nl + 1, []
     while pos < len(raw):
         fnl = raw.index(b"\n", pos)  # FRAME + optional params
         if raw[pos : pos + 5] != b"FRAME":
             raise ValueError("bad frame marker")
-        y = raw[fnl + 1 : fnl + 1 + w * h]  # luma plane only for stats
+        frames.append(raw[fnl + 1 : fnl + 1 + frame_len])
+        pos = fnl + 1 + frame_len
+    return w, h, frames
+
+
+def decode_y4m(raw: bytes) -> dict:
+    """Parse YUV4MPEG2: frame count and mean luma over every frame."""
+    w, h, frames = _y4m_frames(raw)
+    ysum, ycount = 0, 0
+    for frame in frames:
+        y = frame[: w * h]  # luma plane only for stats
         ysum += sum(y)
         ycount += len(y)
-        frames += 1
-        pos = fnl + 1 + frame_len
     return {
         "format": "y4m",
         "width": w,
         "height": h,
         "channels": 3,
-        "n_units": frames,
+        "n_units": len(frames),
         "mean_val": ysum / ycount if ycount else 0.0,
     }
 
@@ -314,6 +400,7 @@ def decode_payload(raw: bytes) -> dict:
     raise ValueError("unknown media container")
 
 
+@_reads(None)
 def decode_media(media: DataFrame) -> DataFrame:
     """Arrow-batched decode: binary payload → typed metadata + stats.
 
@@ -321,29 +408,15 @@ def decode_media(media: DataFrame) -> DataFrame:
     grammar) per payload; sha1 content-addresses the full file bytes.
     """
 
-    def decode_batches(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def decode(doc_id, modality, raw):
+        m = decode_payload(raw)
+        return [(
+            doc_id, modality, m["format"], m["width"], m["height"],
+            m["channels"], m["n_units"], len(raw), float(m["mean_val"]),
+            hashlib.sha1(raw).hexdigest(),
+        )]
 
-        for pdf in batches:
-            out = {k.name: [] for k in DECODED_SCHEMA.fields}
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                raw = bytes(payload)
-                meta = decode_payload(raw)
-                out["doc_id"].append(doc_id)
-                out["modality"].append(modality)
-                out["format"].append(meta["format"])
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["channels"].append(meta["channels"])
-                out["n_units"].append(meta["n_units"])
-                out["n_bytes"].append(len(raw))
-                out["mean_val"].append(float(meta["mean_val"]))
-                out["payload_sha"].append(hashlib.sha1(raw).hexdigest())
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
+    return map_payloads(media, decode, DECODED_SCHEMA, decode_media.modality)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -356,45 +429,22 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
+@_reads(None)
 def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
     """Real video frame sampling: walk the Y4M stream, emit one row per
     sampled frame with the sha1 of that frame's actual YUV bytes (the
     row-per-frame fan-out downstream batching consumes). Non-video
     payloads contribute their single 'frame' (the whole payload)."""
 
-    def sample_batches(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def sample(doc_id, modality, raw):
+        frames = _y4m_frames(raw)[2] if raw[:9] == b"YUV4MPEG2" else [raw]
+        return [
+            (doc_id, modality, idx, hashlib.sha1(frame).hexdigest())
+            for idx, frame in enumerate(frames)
+            if idx % every_n == 0
+        ]
 
-        for pdf in batches:
-            out = {k.name: [] for k in FRAME_SCHEMA.fields}
-
-            def emit(doc_id, modality, idx, blob):
-                out["doc_id"].append(doc_id)
-                out["modality"].append(modality)
-                out["frame_idx"].append(idx)
-                out["frame_sha"].append(hashlib.sha1(blob).hexdigest())
-
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                raw = bytes(payload)
-                if raw[:9] != b"YUV4MPEG2":
-                    emit(doc_id, modality, 0, raw)
-                    continue
-                nl = raw.index(b"\n")
-                params = {p[:1]: p[1:] for p in raw[:nl].split(b" ")[1:] if p}
-                frame_len = int(params[b"W"]) * int(params[b"H"]) * 3 // 2
-                pos, idx = nl + 1, 0
-                while pos < len(raw):
-                    fnl = raw.index(b"\n", pos)
-                    frame = raw[fnl + 1 : fnl + 1 + frame_len]
-                    if idx % every_n == 0:
-                        emit(doc_id, modality, idx, frame)
-                    idx += 1
-                    pos = fnl + 1 + frame_len
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(sample_batches, schema=FRAME_SCHEMA)
+    return map_payloads(media, sample, FRAME_SCHEMA, frame_sample.modality)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -431,36 +481,23 @@ def resize_ppm(raw: bytes, factor: int) -> bytes:
     return b"P6\n%d %d\n255\n" % (nw, nh) + b"".join(rows)
 
 
+@_reads("image")
 def resize_images(media: DataFrame, factor: int = 2) -> DataFrame:
     """Arrow-batched image resize over the media table (image rows
     only): the downsample step of a vision-pretraining pipeline. The
     kernel re-encodes a real PPM, so downstream stages can re-decode
     the output payload with the same parser."""
 
-    def resize_batches(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def resize(doc_id, modality, raw):
+        src = decode_ppm(raw)
+        small = resize_ppm(raw, factor)
+        meta = decode_ppm(small)
+        return [(
+            doc_id, src["width"], src["height"], meta["width"],
+            meta["height"], len(small), hashlib.sha1(small).hexdigest(),
+        )]
 
-        for pdf in batches:
-            out = {k.name: [] for k in RESIZED_SCHEMA.fields}
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                if modality != "image":
-                    continue
-                raw = bytes(payload)
-                src = decode_ppm(raw)
-                small = resize_ppm(raw, factor)
-                meta = decode_ppm(small)
-                out["doc_id"].append(doc_id)
-                out["src_width"].append(src["width"])
-                out["src_height"].append(src["height"])
-                out["width"].append(meta["width"])
-                out["height"].append(meta["height"])
-                out["n_bytes"].append(len(small))
-                out["resized_sha"].append(hashlib.sha1(small).hexdigest())
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(resize_batches, schema=RESIZED_SCHEMA)
+    return map_payloads(media, resize, RESIZED_SCHEMA, resize_images.modality)
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -480,21 +517,9 @@ def wav_windows(raw: bytes, win: int) -> list[dict]:
     model. Pure-integer moments; one sqrt per window."""
     import math
 
-    if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    pos, data = 12, None
-    while pos + 8 <= len(raw):
-        cid = raw[pos : pos + 4]
-        size = struct.unpack("<I", raw[pos + 4 : pos + 8])[0]
-        if cid == b"data":
-            data = raw[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-    if data is None:
-        raise ValueError("missing data chunk")
-    n = len(data) // 2
-    samples = struct.unpack("<%dh" % n, data[: 2 * n])
+    samples = _wav_pcm16(raw)
     out = []
-    for i in range(0, n, win):
+    for i in range(0, len(samples), win):
         chunk = samples[i : i + win]
         ss = sum(s * s for s in chunk)
         out.append(
@@ -508,30 +533,21 @@ def wav_windows(raw: bytes, win: int) -> list[dict]:
     return out
 
 
+@_reads("audio")
 def audio_features(media: DataFrame, win: int = 64) -> DataFrame:
     """Arrow-batched audio feature extraction (audio rows only): one
     row per fixed-size sample window with RMS energy and peak — the
     row-per-frame fan-out shape shared with frame_sample."""
 
-    def feature_batches(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def features(doc_id, modality, raw):
+        return [
+            (doc_id, w["win_idx"], w["n_samples"], w["rms"], w["peak"])
+            for w in wav_windows(raw, win)
+        ]
 
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FEATURE_SCHEMA.fields}
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                if modality != "audio":
-                    continue
-                for w in wav_windows(bytes(payload), win):
-                    out["doc_id"].append(doc_id)
-                    out["win_idx"].append(w["win_idx"])
-                    out["n_samples"].append(w["n_samples"])
-                    out["rms"].append(w["rms"])
-                    out["peak"].append(w["peak"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(feature_batches, schema=AUDIO_FEATURE_SCHEMA)
+    return map_payloads(
+        media, features, AUDIO_FEATURE_SCHEMA, audio_features.modality
+    )
 
 
 SCENE_SCHEMA = T.StructType(
@@ -551,49 +567,31 @@ def y4m_scene_diffs(raw: bytes) -> list[dict]:
     real Y4M stream — the shot-boundary signal of video preprocessing.
     One row per frame transition; a transition whose luma MAD exceeds
     SCENE_CUT_MAD is a cut candidate."""
-    nl = raw.index(b"\n")
-    params = {p[:1]: p[1:] for p in raw[:nl].split(b" ")[1:] if p}
-    w, h = int(params[b"W"]), int(params[b"H"])
-    frame_len = w * h * 3 // 2
-    pos, prev, idx, out = nl + 1, None, 0, []
-    while pos < len(raw):
-        fnl = raw.index(b"\n", pos)
-        if raw[pos : pos + 5] != b"FRAME":
-            raise ValueError("bad frame marker")
-        luma = raw[fnl + 1 : fnl + 1 + w * h]
+    w, h, frames = _y4m_frames(raw)
+    prev, out = None, []
+    for idx, frame in enumerate(frames):
+        luma = frame[: w * h]
         if prev is not None:
             mad = sum(abs(a - b) for a, b in zip(luma, prev)) / len(luma)
             out.append(
                 {"frame_idx": idx, "mad": mad, "is_cut": int(mad > SCENE_CUT_MAD)}
             )
         prev = luma
-        idx += 1
-        pos = fnl + 1 + frame_len
     return out
 
 
+@_reads("video")
 def scene_cuts(media: DataFrame) -> DataFrame:
     """Arrow-batched scene-cut detection (video rows only): walks each
     Y4M stream once, emitting one row per frame transition."""
 
-    def scene_batches(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def cuts(doc_id, modality, raw):
+        return [
+            (doc_id, d["frame_idx"], d["mad"], d["is_cut"])
+            for d in y4m_scene_diffs(raw)
+        ]
 
-        for pdf in batches:
-            out = {k.name: [] for k in SCENE_SCHEMA.fields}
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                if modality != "video":
-                    continue
-                for d in y4m_scene_diffs(bytes(payload)):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(d["frame_idx"])
-                    out["mad"].append(d["mad"])
-                    out["is_cut"].append(d["is_cut"])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(scene_batches, schema=SCENE_SCHEMA)
+    return map_payloads(media, cuts, SCENE_SCHEMA, scene_cuts.modality)
 
 
 IMAGE_HASH_SCHEMA = T.StructType(
@@ -609,6 +607,7 @@ IMAGE_HASH_SCHEMA = T.StructType(
 )
 
 
+@_reads("image")
 def image_hashes(media: DataFrame) -> DataFrame:
     """Arrow-batched perceptual hashing over the media table's image
     rows: aHash (8×8 mean threshold) + dHash (9×8 horizontal gradient)
@@ -619,55 +618,19 @@ def image_hashes(media: DataFrame) -> DataFrame:
     the two's-complement form for JVM-side bit ops (xor/bit_count),
     the hex columns the unsigned spelling."""
 
-    def hash_batches(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def hashes(doc_id, modality, raw):
+        w, h, _ = _ppm_header(raw)
+        a, d = ahash64(raw), dhash64(raw)
+        return [(
+            doc_id, w, h, _signed64(a), _signed64(d), f"{a:016x}", f"{d:016x}",
+        )]
 
-        def signed(u: int) -> int:
-            return u - (1 << 64) if u >= (1 << 63) else u
-
-        for pdf in batches:
-            out = {k.name: [] for k in IMAGE_HASH_SCHEMA.fields}
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                if modality != "image":
-                    continue
-                raw = bytes(payload)
-                w, h, _ = _ppm_header(raw)
-                a, d = ahash64(raw), dhash64(raw)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["ahash"].append(signed(a))
-                out["dhash"].append(signed(d))
-                out["ahash_hex"].append(f"{a:016x}")
-                out["dhash_hex"].append(f"{d:016x}")
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(hash_batches, schema=IMAGE_HASH_SCHEMA)
+    return map_payloads(media, hashes, IMAGE_HASH_SCHEMA, image_hashes.modality)
 
 
 # --- audio fingerprint (round 10: energy-envelope dHash) ---------------
 
 AUDIO_FP_BANDS = 65  # 65 band energies -> 64 sign-of-delta bits
-
-
-def _wav_pcm16(raw: bytes) -> tuple:
-    """PCM16 sample tuple from a RIFF/WAVE byte string (the
-    wav_windows chunk walk, factored for reuse)."""
-    if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    pos, data = 12, None
-    while pos + 8 <= len(raw):
-        cid = raw[pos : pos + 4]
-        size = struct.unpack("<I", raw[pos + 4 : pos + 8])[0]
-        if cid == b"data":
-            data = raw[pos + 8 : pos + 8 + size]
-        pos += 8 + size + (size & 1)
-    if data is None:
-        raise ValueError("missing data chunk")
-    n = len(data) // 2
-    return struct.unpack("<%dh" % n, data[: 2 * n])
 
 
 def audio_fp64(raw: bytes) -> int:
@@ -706,31 +669,17 @@ AUDIO_FP_SCHEMA = T.StructType(
 )
 
 
+@_reads("audio")
 def audio_fingerprints(media: DataFrame) -> DataFrame:
     """Arrow-batched audio fingerprinting over the media table's audio
     rows: one 64-bit energy-envelope dHash per stream (audio_fp64).
     LongType carries the two's-complement form for JVM bit ops
     (xor/bit_count), fp_hex the unsigned spelling."""
 
-    def fp_batches(batches: Iterator["object"]) -> Iterator["object"]:
-        import pandas as pd
+    def fingerprint(doc_id, modality, raw):
+        u = audio_fp64(raw)
+        return [(doc_id, len(_wav_pcm16(raw)), _signed64(u), f"{u:016x}")]
 
-        def signed(u: int) -> int:
-            return u - (1 << 64) if u >= (1 << 63) else u
-
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FP_SCHEMA.fields}
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                if modality != "audio":
-                    continue
-                raw = bytes(payload)
-                u = audio_fp64(raw)
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(_wav_pcm16(raw)))
-                out["fp"].append(signed(u))
-                out["fp_hex"].append(f"{u:016x}")
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(fp_batches, schema=AUDIO_FP_SCHEMA)
+    return map_payloads(
+        media, fingerprint, AUDIO_FP_SCHEMA, audio_fingerprints.modality
+    )

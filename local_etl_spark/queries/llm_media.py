@@ -43,7 +43,7 @@ def llm_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas — multimodal/columns.py. Rows-only: the kernel output
     isn't SQL-expressible; tests/test_llm_media_text.py cross-checks
     every decoded field against a driver-side reference parse."""
-    media = synthesize_media(t(spark, sf_dir, "documents"))
+    media = synthesize_media(t(spark, sf_dir, "documents"), decode_media.modality)
     return decode_media(media)
 
 
@@ -56,8 +56,7 @@ def llm_media_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sampled-frame fan-out isn't SQL-expressible."""
     from local_etl_spark.multimodal.columns import frame_sample
 
-    # r14: frame sampling reads only video rows — synthesize only them
-    media = synthesize_media(t(spark, sf_dir, "documents"), "video")
+    media = synthesize_media(t(spark, sf_dir, "documents"), frame_sample.modality)
     return frame_sample(media, every_n=10)
 
 
@@ -72,10 +71,7 @@ def llm_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible."""
     from local_etl_spark.multimodal.columns import resize_images
 
-    # r14: the resize kernel drops non-image rows on arrival, so only
-    # the image third is synthesized (guide §2.3 — filter before the
-    # opaque Python op; payloads for kept rows are byte-identical)
-    media = synthesize_media(t(spark, sf_dir, "documents"), "image")
+    media = synthesize_media(t(spark, sf_dir, "documents"), resize_images.modality)
     return resize_images(media, factor=2)
 
 
@@ -89,8 +85,7 @@ def llm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the same bytes driver-side."""
     from local_etl_spark.multimodal.columns import audio_features
 
-    # r14: audio-only kernel — synthesize only the audio third
-    media = synthesize_media(t(spark, sf_dir, "documents"), "audio")
+    media = synthesize_media(t(spark, sf_dir, "documents"), audio_features.modality)
     return audio_features(media, win=64)
 
 
@@ -104,8 +99,7 @@ def llm_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
     mad, flag) row."""
     from local_etl_spark.multimodal.columns import scene_cuts
 
-    # r14: video-only kernel — synthesize only the video third
-    media = synthesize_media(t(spark, sf_dir, "documents"), "video")
+    media = synthesize_media(t(spark, sf_dir, "documents"), scene_cuts.modality)
     return scene_cuts(media)
 
 
@@ -132,12 +126,9 @@ def llm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every hash with an independent NumPy reference and the
     exact pair set by brute force.
     """
-    # r14: image-only kernel — synthesize only the image third
-    # (guide §2.3; video payloads are the most expensive to build and
-    # were thrown away by the kernel's modality check)
-    media = synthesize_media(t(spark, sf_dir, "documents"), "image")
     from local_etl_spark.multimodal.columns import image_hashes
 
+    media = synthesize_media(t(spark, sf_dir, "documents"), image_hashes.modality)
     hashes = image_hashes(media).persist()
     bands = hashes.select(
         "doc_id",
@@ -173,7 +164,6 @@ def llm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 AUDIO_FP_HAMMING_T = 6  # near-dup bar; 8 one-byte bands cover ham<=7
-AUDIO_FP_JOIN_BANDS = 8
 
 
 @query("llm_audio_fingerprint", family="llm", oracle=None)
@@ -186,8 +176,8 @@ def llm_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     band energies as exact integer sums of squares, bit i =
     sign(energy[i+1] − energy[i]) — the loudness contour, gain- and
     duration-robust, the Haitsma–Kalker idea in 64 bits). Candidate
-    pairs come from the llm_image_phash pigeonhole machinery: a pair
-    with hamming ≤ 7 must agree on ≥1 of 8 one-byte bands, so 8
+    pairs come from the pigeonhole machinery (_cm_banded_partners): a
+    pair with hamming ≤ 7 must agree on ≥1 of 8 one-byte bands, so 8
     equi-joins are EXACT for the ≤{AUDIO_FP_HAMMING_T} bar — no
     nested loop, no recall loss. Verification is one xor+bit_count
     per candidate. Output is one row per audio doc — fingerprint plus
@@ -205,36 +195,12 @@ def llm_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from local_etl_spark.multimodal.columns import audio_fingerprints
 
-    # r14: audio-only kernel — synthesize only the audio third
-    media = synthesize_media(t(spark, sf_dir, "documents"), "audio")
+    media = synthesize_media(
+        t(spark, sf_dir, "documents"), audio_fingerprints.modality
+    )
     fps = audio_fingerprints(media).persist()
-    bands = fps.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftright(F.col("fp"), i * 8)
-                    .bitwiseAND(F.lit(255))
-                    .alias("bv"),
-                )
-                for i in range(AUDIO_FP_JOIN_BANDS)
-            ])
-        ).alias("k"),
-    ).select("doc_id", "fp", "k.band", "k.bv")
-    a, b = bands.alias("a"), bands.alias("b")
-    ham = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
     partners = (
-        a.join(b, ["band", "bv"])
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("partner"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= AUDIO_FP_HAMMING_T)
-        .dropDuplicates(["doc_id", "partner"])
+        _cm_banded_partners(fps, "fp", AUDIO_FP_HAMMING_T, [])
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_near_dups"),
@@ -355,19 +321,13 @@ def llm_dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_hashes,
     )
 
-    # r14: each union child synthesizes ONLY its own modality third.
-    # The previous shared `synthesize_media(docs)` relation was
-    # unpersisted, so each union child re-ran the full synthesis
-    # (2 complete passes incl. the video payloads BOTH kernels drop —
-    # the most expensive third to build). Now the image child builds
-    # image payloads only and the audio child audio payloads only:
-    # total synthesis work falls from 2 full passes to 2/3 of one
-    # (guide §2.3 — filter before the opaque Python op).
     mfp = (
-        image_hashes(synthesize_media(docs, "image"))
+        image_hashes(synthesize_media(docs, image_hashes.modality))
         .select("doc_id", F.col("ahash").alias("mfp"), F.lit("image").alias("chan"))
         .unionByName(
-            audio_fingerprints(synthesize_media(docs, "audio")).select(
+            audio_fingerprints(
+                synthesize_media(docs, audio_fingerprints.modality)
+            ).select(
                 "doc_id", F.col("fp").alias("mfp"), F.lit("audio").alias("chan")
             )
         )

@@ -240,10 +240,14 @@ FIXED_THIS_ROUND: tuple[str, ...] = ()
 # centrality ops); this slice carries only rows-only ops ADDED this
 # round, so each gets its first external record immediately.
 ROWS_ONLY_REPRESENT: tuple[str, ...] = (
-    # r14 (optimization round): every rows-only op already has a
-    # driver record; re-present the rows-only media ops whose
-    # synthesis input was modality-filtered this round so the external
-    # spark_rows check re-attests the row sets are unchanged.
+    # r14 (optimization round): the rows-only media ops whose
+    # synthesis input was modality-filtered that round, re-presented
+    # for a fresh external spark_rows record. The record does not
+    # compare against the prior one: llm_media_framesample's filter cut
+    # it from 643 to 309 rows (CORRECTNESS_r06 vs r14) and this check
+    # did not catch it. The filter now comes from each kernel's own
+    # declaration (framesample: none), and the row sets are pinned in
+    # tests/test_llm_media_text.py.
     "llm_image_phash",
     "llm_audio_fingerprint",
     "llm_video_scenes",

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -63,6 +64,33 @@ def test_decoder_rejects_garbage():
 
     with pytest.raises(ValueError):
         decode_payload(b"GIF89a not a supported container")
+
+
+def test_container_walks_reject_malformed_input():
+    """Each shared container walk rejects a malformed file, whichever
+    kernel calls it: a missing RIFF chunk, a bad Y4M frame marker and
+    a non-4:2:0 Y4M stream."""
+    from local_etl_spark.multimodal.columns import (
+        _gen_payload,
+        decode_payload,
+        wav_windows,
+        y4m_scene_diffs,
+    )
+
+    wav = _gen_payload(1, "abc")[1]
+    no_data = wav[:36] + b"junk" + wav[40:]
+    for parse in (decode_payload, lambda raw: wav_windows(raw, 64)):
+        with pytest.raises(ValueError, match="missing"):
+            parse(no_data)
+    y4m = _gen_payload(2, "abc")[1]
+    nl = y4m.index(b"\n")
+    bad_marker = y4m[: nl + 1] + b"FRAMX" + y4m[nl + 6 :]
+    not_420 = y4m.replace(b"C420", b"C444", 1)
+    for parse in (decode_payload, y4m_scene_diffs):
+        with pytest.raises(ValueError, match="bad frame marker"):
+            parse(bad_marker)
+        with pytest.raises(ValueError, match="4:2:0"):
+            parse(not_420)
 
 
 def test_frame_sample_shape(spark):
@@ -704,3 +732,52 @@ FROM m LEFT JOIN (
             g["min_text_hamming"],
             g["n_cross_container"],
         ), d
+
+
+# --- row-set pins for the media queries --------------------------------
+#
+# (row count, sha256 of the canonicalized row set) per query and scale.
+# Every media query is rows-only, so these pins are the only check that
+# an optimization leaves its results unchanged. llm_media_framesample is
+# pinned to frame_sample over the UNFILTERED media table: the kernel
+# emits one whole-payload row for every non-video doc, so a modality
+# pre-filter on its input drops rows (643 → 309 at sf0.01).
+
+MEDIA_PINS = {
+    "sf0.001": {
+        "llm_media_decode": (500, "b56e21533003ab94a1656b30b21defa02fa06a14329090c2f6d10ba89bb82dc2"),
+        "llm_media_framesample": (643, "1c87c1f25652d64b8492497877657650298fa04c62d62c887368ceb5c7fc0aa0"),
+        "llm_media_resize": (167, "9be286b6f32e290a8ed29391c2173a9d9ae3a7a57a73c0c54f9485df056e4fcb"),
+        "llm_audio_features": (447, "f7fb911b5735aba8e55157eb7b30609b7c42b8040d13a162bbe7e4d798014788"),
+        "llm_video_scenes": (2223, "b4aa92358f9f7c9c2cfcfa27695696a4e96b3d107626a8d01d4f428bd53e8f65"),
+        "llm_image_phash": (15, "7dde0d95a3b92b66edce1205f126d488ff16c99243bfbedb0912dca6a5501d90"),
+        "llm_audio_fingerprint": (167, "64e442aa2f6f62c6e4b5e5dc60f42729a32aa0708ae6044c2100c8c9cc1bfce0"),
+        "llm_dedup_cross_modal": (500, "a9181b3d24d60ba7283f6973c53e2a323bd2fba55192ad4dd32eca01412e6841"),
+    },
+    "sf0.01": {
+        "llm_media_decode": (500, "c6a9c5dc99b5b36e36796c493cd2f9ac31777c2cc0bdbacc56a044817f50818f"),
+        "llm_media_framesample": (643, "764d9bd4894c08d7f7d6d2d1264181586eabe78872948001fbbdb9c3066d6df1"),
+        "llm_media_resize": (167, "5c00afa72ddb731de4d07180fb6c6524213434fe1626da3ba9a0f8f4529e38c6"),
+        "llm_audio_features": (447, "62c9ba735c607051ffe52a440705503918698e418ffd938c9865b108b5f1aa07"),
+        "llm_video_scenes": (2223, "b4aa92358f9f7c9c2cfcfa27695696a4e96b3d107626a8d01d4f428bd53e8f65"),
+        "llm_image_phash": (7, "96e08b0c7d464bceba96049963af5152798e94b189a03b6efbef805d1fcbaf8f"),
+        "llm_audio_fingerprint": (167, "7140a89eaa391b597bedbe7acb0f3a6f5951708874d71de285a7e760cf5b03f8"),
+        "llm_dedup_cross_modal": (500, "8efbaaa75384994b47edaacfd8a199a55eb2f4a80b70ca0f160e0b01e814b043"),
+    },
+}
+
+# sf0.001 always; the driver's scale when LOCAL_ETL_ORACLE_SF names it
+# (the variable test_oracle_parity reads).
+_PIN_SMOKE = "/root/testdata/sf0.001"
+PIN_SF_DIRS = sorted({_PIN_SMOKE, os.environ.get("LOCAL_ETL_ORACLE_SF", _PIN_SMOKE)})
+
+
+@pytest.mark.parametrize("sf_dir", PIN_SF_DIRS)
+@pytest.mark.parametrize("name", sorted(MEDIA_PINS["sf0.001"]))
+def test_media_query_row_set_pinned(spark, name, sf_dir):
+    from tests.oracle import canon_rows
+
+    df = get(name).fn(spark, sf_dir)
+    rows = [tuple(r) for r in df.collect()]
+    digest = hashlib.sha256(repr(canon_rows(df.columns, rows)).encode()).hexdigest()
+    assert (len(rows), digest) == MEDIA_PINS[os.path.basename(sf_dir)][name]
