@@ -6,56 +6,34 @@ PageRank over it ranks entities by recursive trade centrality — the
 classic iterative-algorithm shape (cf. llm_dedup_cluster's label
 propagation for connected components).
 
-Scale notes: the edge list is built with ONE aggregation over the
-lineitem-orders join and persisted; each PageRank iteration is one
-join + one groupBy on the node key, so the same hash partitioning is
-reused across every round (at cluster scale, pre-`repartition` both
-sides by node id to pin it). ``localCheckpoint`` per round truncates
-lineage — without it round k re-executes rounds 1..k-1 (exponential
-plan growth). The only driver-side values are the per-round
-convergence scalar and the final model-sized result.
+Scale notes: the iterative queries (pagerank, label_prop, mst) build
+one int-keyed pair cache (_int_trade_pairs) and then run one of two
+tiers, chosen by the pair count against GRAPH_LOCAL_MAX_PAIRS: below
+it the whole iteration replays in numpy on the driver over one Arrow
+collect; above it one int-keyed Spark loop runs, where each round
+joins the persisted edge relation with the broadcast node-sized
+vector and aggregates on the node key. ``localCheckpoint`` per round
+truncates lineage — without it round k re-executes rounds 1..k-1
+(exponential plan growth). The only driver-side values of the Spark
+loop are the per-round convergence scalar and the final result.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from local_etl_spark.queries._util import ordered_prefix, t
 from local_etl_spark.registry import query
 
-
-def _env_int(name: str, default: int) -> int:
-    """Scale gates are env-parameterised (round rule: scale-dependent
-    settings live in conf/env with local defaults) so a cluster deploy
-    — or the sf1 8-vs-32-core scaling artifact — can force any tier
-    without code edits."""
-    try:
-        return int(os.environ.get(name, str(default)))
-    except ValueError:
-        return default
-
-
-def _dump_round_plan(df: DataFrame, name: str) -> None:
-    """VERDICT r13 #6/#8: when SPARK_GRAFT_DUMP_ROUND_PLAN names a
-    directory, write the formatted plan of ONE iteration's per-round
-    DataFrame there — the per-round exchange-elision claims become
-    directly visible artifacts instead of code-comment assertions. Off
-    (no env var) in every normal run: zero cost."""
-    out = os.environ.get("SPARK_GRAFT_DUMP_ROUND_PLAN")
-    if not out:
-        return
-    try:
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, f"{name}_round_aggregate.txt"), "w") as f:
-            f.write(txt)
-    except Exception:
-        pass
+# Tier gate of graph_pagerank, graph_label_prop and graph_mst: at or
+# below this many DIRECTED (supplier, customer) pairs the whole
+# iteration replays in numpy over one Arrow collect of the int pair
+# list (~20 B/row, ≤ ~160 MB at the gate — the llm CC_DRIVER_MAX_PAIRS
+# collect-budget class); above it the int-keyed Spark loop runs. Both
+# tiers compute identical rows (tests/test_graph.py forces the gate to
+# 0 and diffs them). Tests and tools override it with setattr.
+GRAPH_LOCAL_MAX_PAIRS = 8_000_000
 
 
 def _dec_key(n):
@@ -64,7 +42,7 @@ def _dec_key(n):
     compare like the pair (n / 10^digits, digits) — scale the fraction
     to 10^12 exactly (n · 10^(12−digits), an integer) and pack the
     digit count into the low 4 bits. Digit count via exact integer
-    threshold compares, never float log10. Lets the graph driver tiers
+    threshold compares, never float log10. Lets the graph numpy tiers
     reproduce Spark's binary-UTF8 string comparisons on 'c<k>'/'s<k>'
     node names with pure int64 numpy ops (pytest-pinned against str
     sort on randomized inputs)."""
@@ -79,12 +57,6 @@ def _dec_key(n):
 
 DAMPING = 0.85
 N_ITER = 12
-# broadcast the per-iteration rank vector while it plausibly fits an
-# executor (~16 B/node → ~32 MB at the cap); past this the shuffle
-# join takes over (see graph_pagerank body)
-PR_BROADCAST_MAX_NODES = _env_int(
-    "SPARK_GRAFT_PR_BROADCAST_MAX_NODES", 2_000_000
-)
 # convergence early-exit: stop once the per-round L1 rank delta drops
 # below PR_TOL_L1 (VERDICT r5 #5). NOTE the measured negative result
 # (SCALE.md §14.3): PageRank's update is a DAMPING-contraction in L1,
@@ -92,7 +64,7 @@ PR_BROADCAST_MAX_NODES = _env_int(
 # (measured 1.49 → 0.25 over 12 rounds at sf0.1), so no tolerance
 # consistent with 12-round output can trigger inside the iteration
 # cap — the check exists for graphs that mix faster than the damping
-# bound and costs one model-sized join per round (~2% measured).
+# bound and rides each round's checkpoint as an observe() metric.
 PR_TOL_L1 = 1e-6
 # edge-cache packing target (see graph_pagerank body): re-partition
 # the persisted edge relation to ~this many rows per partition, capped
@@ -132,34 +104,53 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PR_SCALE = 10**15  # fixed-point rank units (round-12 oracle conversion)
-# r13 optimization gate: below this node count the per-round rank
-# vector lives on the DRIVER (a dict of exact integers) instead of a
-# checkpointed distributed relation. Below PR_BROADCAST_MAX_NODES the
-# vector is already collected to the driver and shipped whole to every
-# executor each round (that is what a broadcast IS), so holding it
-# driver-side moves no new bytes — it just collapses the per-round job
-# count from 3 (broadcast build ×2 + localCheckpoint) to 1 (the
-# node-keyed aggregate collect). The middle regime
-# (PR_DRIVER_MAX_NODES, PR_BROADCAST_MAX_NODES] keeps the r12
-# broadcast loop; past the broadcast gate the shuffle join remains.
-PR_DRIVER_MAX_NODES = _env_int("SPARK_GRAFT_PR_DRIVER_MAX_NODES", 250_000)
+def _int_trade_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int]:
+    """The directed trade pairs with INTEGER node ids — supplier k →
+    a = 2k, customer k → b = 2k+1 (a bijection; _node_name inverts it)
+    — and exact cent weights w, persisted and counted in one job.
+    Returns (pairs, n_pairs). The pair is cached BEFORE the symmetric
+    union / out-weight normalization reference it: each of those
+    embeds the pair subtree, and without the cache the lineitem⋈orders
+    join executed up to four times inside one cache fill (measured
+    3.0 s → 1.6 s at sf0.1)."""
+    li = t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_extendedprice"
+    )
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    pairs = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_suppkey", "o_custkey")
+        .agg(
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+            .cast("bigint")
+            .alias("w")
+        )
+        .select(
+            (F.col("l_suppkey") * 2).cast("int").alias("a"),
+            (F.col("o_custkey") * 2 + 1).cast("int").alias("b"),
+            "w",
+        )
+        .persist()
+    )
+    return pairs, pairs.count()
 
-# r14 optimization gate (optimization round 2 — the betweenness/
-# closeness driver-replay pattern one level up): below this DIRECTED
-# pair count the whole iteration replays on the driver in numpy over
-# the collected (a, b, w) pair list — ~20 B/row, ≤ ~160 MB at the
-# default gate, the llm CC_DRIVER_MAX_PAIRS collect-budget class. The
-# replay is arithmetic-identical to the Spark expressions (float64
-# multiply/divide are IEEE-correctly-rounded in both; round-half-away
-# = floor(x) + (frac ≥ 0.5) replicates Spark's HALF_UP round on
-# positive doubles — the SAME replay tests/test_graph.py has pinned
-# bit-for-bit since round 12; integer mass sums are order-free), so
-# the tier changes job count (12 per-round jobs → 1 collect), never
-# values. Past the gate the r13 driver-vector tier, the broadcast
-# tier, then the shuffle tier stand unchanged — all three
-# pytest-forced via these env-overridable gates.
-PR_LOCAL_MAX_EDGES = _env_int("SPARK_GRAFT_PR_LOCAL_MAX_EDGES", 8_000_000)
+
+def _node_name(i: int) -> str:
+    """Node name of int id i: 's<k>' for supplier id 2k, 'c<k>' for
+    customer id 2k+1."""
+    return ("c" if i % 2 else "s") + str(i // 2)
+
+
+def _node_name_col(c: str) -> Column:
+    """_node_name as a Spark expression over int id column c."""
+    return F.expr(
+        f"concat(IF(pmod({c}, 2) = 0, 's', 'c'), CAST({c} DIV 2 AS STRING))"
+    )
+
+
+PR_SCALE = 10**15  # fixed-point rank units (round-12 oracle conversion)
 
 
 def _pagerank_oracle(rounds: int) -> str:
@@ -247,11 +238,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The symmetric edge construction leaves no dangling nodes, so the
     rank mass is conserved and the (1-d)/N teleport term is exact.
-    Per iteration: one shuffle join of edges with the rank vector on
-    the source id and one groupBy on the destination — both on node
-    keys, so Catalyst reuses one partitioning; edges (with their
-    precomputed outgoing-weight normalization) are computed once and
-    persisted.
+    Two tiers (GRAPH_LOCAL_MAX_PAIRS): a numpy replay of the whole
+    iteration over one collect of the int pair list, or one int-keyed
+    Spark loop — per round, one map-side join of the persisted edge
+    list with the broadcast rank vector and one aggregate on the node
+    key; edges (with their precomputed outgoing-weight normalization)
+    are computed once and persisted.
 
     SQL-ORACLED since round 12 (conversion #16, the flagship): ranks
     are FIXED-POINT BIGINTs in units of 1e-15 — each edge term rounds
@@ -267,47 +259,18 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer iteration in pure Python (which also pins that the
     L1 early-exit cannot fire within the unrolled budget).
     """
-    # r13: the directed (supplier, customer, cents) pair is PERSISTED
-    # before the symmetric union / out-weight normalization reference
-    # it — the union and the outw aggregate each embed the pair
-    # subtree, so without the cache the lineitem⋈orders join executed
-    # FOUR times inside one cache fill (measured 3.0 s → 1.6 s at
-    # sf0.1). Node keys are INTEGER ids from the start (supplier k →
-    # 2k, customer k → 2k+1 — a bijection; w/p values are unchanged,
-    # so every downstream sum is identical); the 's<k>'/'c<k>' strings
-    # are reconstructed only at the output edge.
-    li = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    ipair = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_suppkey", "o_custkey")
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("w")
-        )
-        .select(
-            (F.col("l_suppkey") * 2).cast("int").alias("a"),
-            (F.col("o_custkey") * 2 + 1).cast("int").alias("b"),
-            "w",
-        )
-        .persist()
-    )
-    n_pairs = ipair.count()
-    n_edges = 2 * n_pairs
+    ipair, n_pairs = _int_trade_pairs(spark, sf_dir)
     if n_pairs == 0:
-        # empty-graph guard (ADVICE r13): the driver tiers build
-        # pandas frames that cannot carry an explicit schema when
+        # empty-graph guard (ADVICE r13): the numpy tier builds a
+        # pandas frame that cannot carry an explicit schema when
         # empty — return one here instead (reachable via corpus knobs,
         # never on shipped testdata)
         ipair.unpersist()
         return spark.createDataFrame(
             [], "node string, rank double, kind string"
         )
-    if n_pairs <= PR_LOCAL_MAX_EDGES:
-        # r14 tier (see PR_LOCAL_MAX_EDGES): collect the pair list
+    if n_pairs <= GRAPH_LOCAL_MAX_PAIRS:
+        # numpy tier: collect the pair list
         # once and replay the whole fixed-point iteration in numpy —
         # 12 per-round Spark jobs collapse to ONE Arrow collect. Every
         # arithmetic step mirrors the Spark expressions exactly:
@@ -319,7 +282,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         #   new      = teleport + round(0.85 · mass_f)
         # — the identical pure-Python replay is pinned bit-for-bit
         # against this query by tests/test_graph.py (r12), and the
-        # tier-parity test forces this gate off and asserts equality.
+        # tier-parity test forces the gate to 0 and asserts equality.
         import numpy as np
         import pandas as pd
 
@@ -369,10 +332,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.createDataFrame(
             pd.DataFrame(
                 {
-                    "node": [
-                        ("c" if i % 2 else "s") + str(i // 2)
-                        for i in uniq.tolist()
-                    ],
+                    "node": [_node_name(i) for i in uniq.tolist()],
                     "rank": rank.tolist(),
                 }
             )
@@ -382,14 +342,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("rank").cast("double") / F.lit(1e15)).alias("rank"),
             F.substring("node", 1, 1).alias("kind"),
         )
+    # Spark tier: one int-keyed loop; the 's<k>'/'c<k>' names appear
+    # only at the output
     iedges = ipair.unionAll(
         ipair.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
     )
     # normalize outgoing weights once: P(u→v) = w/outw(u)
-    ioutw = iedges.groupBy("a").agg(F.sum("w").alias("outw"))
-    inorm0 = iedges.join(ioutw, "a").select(
-        "a", "b", (F.col("w") / F.col("outw")).alias("p")
-    )
+    outw = iedges.groupBy("a").agg(F.sum("w").alias("outw"))
     # SIZE-AWARE edge-cache packing (round 6, A/B-measured): 12
     # iterations × tiny stages × 32 tasks over a ~240k-row cache is
     # task-overhead-dominated at local scale. The clamp at
@@ -400,177 +359,81 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         1,
         min(
             spark.sparkContext.defaultParallelism,
-            n_edges // PR_EDGE_ROWS_PER_PART + 1,
+            2 * n_pairs // PR_EDGE_ROWS_PER_PART + 1,
         ),
     )
-    node_rel = (
-        ipair.select("a")
-        .unionAll(ipair.select(F.col("b").alias("a")))
-        .distinct()
-    )
-    n_nodes = node_rel.count()  # model-sized (drives the teleport term)
-    # rank-vector join strategy is SIZE-GATED (the llm_tfidf pattern):
-    # below the threshold the per-iteration rank vector broadcasts
-    # (~16 B/node), so the EDGE LIST — the big side — never shuffles
-    # for the join at all and each iteration is one map-side join +
-    # one node-keyed aggregate (A/B at sf0.1: 16.0 → 10.7 s).
-    # Past the threshold (a rank vector too big to ship) the plain
-    # shuffle join remains, which is the 1000-executor shape anyway.
-    broadcast_ranks = n_nodes <= PR_BROADCAST_MAX_NODES
-    if n_nodes <= PR_DRIVER_MAX_NODES:
-        # r13: driver-held rank vector (see PR_DRIVER_MAX_NODES). All
-        # ARITHMETIC stays in Spark SQL expressions — the same
-        # round/cast chains as the distributed branch, so no float op
-        # changes engines: the teleport/init constants evaluate once
-        # via a OneRowRelation, the per-edge contribution and the
-        # 0.85-damped mass run inside the one per-round aggregate job,
-        # and Python only holds the integer dict, fills absent nodes
-        # with the teleport constant (≡ coalesce(mass, 0)) and sums
-        # the exact-integer L1 delta for the early-exit safety net.
-        #
-        # Per-round plan shape (measured, guide §2.3/§2.4): integer
-        # node keys, and the edge cache is HASH-PARTITIONED BY b so
-        # the per-round aggregate reuses the cache partitioning and
-        # plans NO Exchange — each round is one single-stage job
-        # (+ the model-sized broadcast build) with Arrow transfers
-        # both ways. Round cost 0.77 → 0.36 s at sf0.1 from the
-        # exchange elision + int keys.
-        import pandas as pd
-
-        inorm = inorm0.repartition(k_parts, "b").persist()
-        inorm.count()
-        ids = sorted(r.a for r in node_rel.collect())
-        ipair.unpersist()
-        consts = spark.sql(
-            f"SELECT CAST(round(1e15 / {n_nodes}) AS BIGINT) AS r0,"
-            f" CAST(round(0.15e15 / {n_nodes}) AS BIGINT) AS tp"
-        ).first()
-        r0, teleport = consts.r0, consts.tp
-        state = dict.fromkeys(ids, r0)
-        for _round in range(N_ITER):
-            rdf = spark.createDataFrame(
-                pd.DataFrame(
-                    {"node": list(state.keys()),
-                     "rank": list(state.values())}
-                )
-            )
-            res_df = (
-                inorm.join(F.broadcast(rdf), inorm.a == rdf.node)
-                .groupBy(F.col("b").alias("node"))
-                .agg(
-                    F.sum(
-                        F.expr(
-                            "CAST(round(CAST(rank AS DOUBLE) * p) AS BIGINT)"
-                        )
-                    ).alias("mass")
-                )
-                .select(
-                    "node",
-                    F.expr(
-                        "CAST(round(0.85 * CAST(mass AS DOUBLE)) AS BIGINT)"
-                    ).alias("dmass"),
-                )
-            )
-            if _round == 0:
-                _dump_round_plan(res_df, "graph_pagerank")
-            res = res_df.toPandas()
-            new_state = dict.fromkeys(ids, teleport)
-            for nid, dmass in zip(res["node"], res["dmass"]):
-                nid = int(nid)
-                if nid in new_state:
-                    new_state[nid] = teleport + int(dmass)
-            l1 = sum(abs(new_state[i] - state[i]) for i in ids)
-            state = new_state
-            if l1 < PR_TOL_L1 * PR_SCALE:
-                break
-        inorm.unpersist()
-        out = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "node": [
-                        ("c" if i % 2 else "s") + str(i // 2) for i in ids
-                    ],
-                    "rank": [state[i] for i in ids],
-                }
-            )
-        )
-        return out.select(
-            "node",
-            (F.col("rank").cast("double") / F.lit(1e15)).alias("rank"),
-            F.substring("node", 1, 1).alias("kind"),
-        )
-    # distributed branches (> PR_DRIVER_MAX_NODES): derive the string
-    # relations from the int-keyed pair cache (one pass, identical
-    # values) and run the pre-r13 loop unchanged
-    _name = "concat(IF(pmod({c}, 2) = 0, 's', 'c'), CAST({c} DIV 2 AS STRING))"
     norm = (
-        inorm0.selectExpr(
-            _name.format(c="a") + " AS a",
-            _name.format(c="b") + " AS b",
-            "p",
-        )
+        iedges.join(outw, "a")
+        .select("a", "b", (F.col("w") / F.col("outw")).alias("p"))
         .coalesce(k_parts)
         .persist()
     )
     norm.count()
     ipair.unpersist()
-    nodes = norm.select(F.col("a").alias("node")).distinct().persist()
-    ranks = nodes.select(
+    # the symmetric edge list gives every node an out-edge, so the
+    # sources are the whole node set
+    ranks = norm.select(F.col("a").alias("node")).distinct().localCheckpoint()
+    n_nodes = ranks.count()  # model-sized (drives the teleport term)
+    ranks = ranks.select(
         "node",
         F.expr(f"CAST(round(1e15 / {n_nodes}) AS BIGINT)").alias("rank"),
     ).localCheckpoint()
+    zero = F.lit(0).cast("bigint")
     for _ in range(N_ITER):
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = (
-            norm.join(r, norm.a == r.node)
-            .groupBy(F.col("b").alias("node"))
-            .agg(
-                F.sum(
-                    F.expr(
-                        "CAST(round(CAST(rank AS DOUBLE) * p) AS BIGINT)"
-                    )
-                ).alias("mass")
+        # The node-sized rank vector is broadcast, so the edge list —
+        # the big side — never shuffles for the join (A/B at sf0.1:
+        # 16.0 → 10.7 s). The hint is unconditional: the checkpointed
+        # vector's size estimate is the product of the join inputs
+        # that built it, so a size-based choice would shuffle it.
+        contrib = norm.join(
+            F.broadcast(ranks), norm.a == ranks.node
+        ).select(
+            F.col("b").alias("node"),
+            F.expr("CAST(round(CAST(rank AS DOUBLE) * p) AS BIGINT)").alias(
+                "mass"
+            ),
+            zero.alias("prev"),
+        )
+        # one node-keyed aggregate over contributions ∪ previous ranks
+        # yields the incoming mass (0 for a node with no contribution
+        # ≡ coalesce(mass, 0)) and the previous rank side by side — no
+        # second join
+        step = (
+            contrib.unionAll(
+                ranks.select(
+                    "node", zero.alias("mass"), F.col("rank").alias("prev")
+                )
+            )
+            .groupBy("node")
+            .agg(F.sum("mass").alias("mass"), F.sum("prev").alias("prev"))
+            .select(
+                "node",
+                F.expr(
+                    f"CAST(round(0.15e15 / {n_nodes}) AS BIGINT)"
+                    " + CAST(round(0.85 * CAST(mass AS DOUBLE)) AS BIGINT)"
+                ).alias("rank"),
+                "prev",
             )
         )
-        prev = (
-            F.broadcast(ranks) if broadcast_ranks else ranks
-        ).withColumnRenamed("rank", "prev")
-        new_rank = F.expr(
-            f"CAST(round(0.15e15 / {n_nodes}) AS BIGINT)"
-            " + CAST(round(0.85 * CAST(coalesce(mass, 0) AS DOUBLE))"
-            " AS BIGINT)"
-        ).alias("rank")
         # convergence early-exit (VERDICT r5 #5): the L1 delta rides
-        # the checkpoint materialization as an observe() metric over a
-        # map-side prev-rank join — ZERO extra jobs (a separate
-        # delta-join job per round A/B-measured +17% on the whole
-        # query). See PR_TOL_L1 for why this is a safety net rather
-        # than a local-scale win (damping-bound contraction).
+        # the checkpoint materialization as an observe() metric — ZERO
+        # extra jobs (a separate delta job per round A/B-measured +17%
+        # on the whole query). See PR_TOL_L1 for why this is a safety
+        # net rather than a local-scale win (damping-bound contraction).
         obs = Observation()
         ranks = (
-            nodes.join(contrib, "node", "left")
-            .join(prev, "node", "left")
-            .select("node", new_rank, "prev")
-            .observe(
-                obs,
-                F.sum(
-                    F.abs(
-                        F.col("rank")
-                        - F.coalesce("prev", F.lit(0).cast("bigint"))
-                    )
-                ).alias("l1"),
+            step.observe(
+                obs, F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1")
             )
             .select("node", "rank")
             # per-round truncation; a sparser every-3rd-round schedule
-            # was measured and saves nothing here — the per-iteration
-            # edge-list shuffle, not the checkpoint job, is the cost
+            # was measured and saves nothing here
             .localCheckpoint()
         )
         if obs.get["l1"] < PR_TOL_L1 * PR_SCALE:
             break
     norm.unpersist()
-    nodes.unpersist()
-    return ranks.select(
+    return ranks.select(_node_name_col("node").alias("node"), "rank").select(
         "node",
         (F.col("rank").cast("double") / F.lit(1e15)).alias("rank"),
         F.substring("node", 1, 1).alias("kind"),
@@ -1175,9 +1038,11 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         and the adopted label is min(struct(-weight, label)) — max
         weight, then lexicographically least label.
 
-    Scale: per round, one join of the (side-filtered) edge list with
-    the label vector on the neighbor key + one node-keyed aggregate —
-    the graph_pagerank shape; labels localCheckpoint per round.
+    Scale: the graph_pagerank tiers — a numpy replay below
+    GRAPH_LOCAL_MAX_PAIRS, else one int-keyed Spark loop: per round,
+    one join of the (side-filtered) edge list with the broadcast label
+    vector on the neighbor key + node-keyed aggregates; labels
+    localCheckpoint per round.
 
     SQL-ORACLED since round 12 (the 14th rows-only→SQL conversion):
     the schedule is a FIXED LPA_ROUNDS-round unroll (not a fixpoint),
@@ -1186,30 +1051,7 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the exact schedule in pure Python and asserts
     label-for-label equality.
     """
-    # r13: persist the directed int-keyed pair BEFORE the symmetric
-    # union references it twice (the graph_pagerank double-execution
-    # fix); supplier k → 2k, customer k → 2k+1, strings reconstructed
-    # at the output edge only.
-    li = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    ipair = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_suppkey", "o_custkey")
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("w")
-        )
-        .select(
-            (F.col("l_suppkey") * 2).cast("int").alias("a"),
-            (F.col("o_custkey") * 2 + 1).cast("int").alias("b"),
-            "w",
-        )
-        .persist()
-    )
-    n_pairs = ipair.count()
+    ipair, n_pairs = _int_trade_pairs(spark, sf_dir)
     if n_pairs == 0:
         # empty-graph guard (ADVICE r13): explicit schema, never an
         # empty pandas frame
@@ -1217,8 +1059,8 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "node string, community string, kind string"
         )
-    if n_pairs <= PR_LOCAL_MAX_EDGES:
-        # r14 tier (the graph_pagerank PR_LOCAL_MAX_EDGES shape):
+    if n_pairs <= GRAPH_LOCAL_MAX_PAIRS:
+        # numpy tier (the graph_pagerank shape):
         # collect the pair list once and replay all LPA_ROUNDS in
         # numpy — 6 per-round jobs collapse to ONE Arrow collect.
         # Everything is exact: weights sum as int64 (order-free), and
@@ -1227,7 +1069,7 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in the LEXICOGRAPHICALLY sorted node-name universe — node
         # names are pure-ASCII 'c<k>'/'s<k>', so Python/numpy string
         # sort order ≡ Spark's binary UTF8 order, and rank order ≡
-        # label order. The tier-parity test forces this gate off and
+        # label order. The tier-parity test forces the gate to 0 and
         # asserts label-for-label equality.
         import numpy as np
         import pandas as pd
@@ -1245,9 +1087,7 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
         bi = codes[ne:]
         n = int(len(uniq))
         ids = np.asarray(uniq, np.int64)
-        names = np.array(
-            [("c" if i % 2 else "s") + str(i // 2) for i in ids.tolist()]
-        )
+        names = np.array([_node_name(i) for i in ids.tolist()])
         order = np.argsort(names)  # node-sized lexicographic sort —
         # ≡ Spark UTF8 order on these pure-ASCII names
         lrank = np.empty(n, np.int64)
@@ -1298,115 +1138,22 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("community"),
             F.substring("node", 1, 1).alias("kind"),
         )
-    # same size-aware edge-cache packing as graph_pagerank (§14.5):
-    # 6 rounds × tiny stages × 32 tasks is scheduler-bound locally;
-    # the clamp no-ops once edges outgrow the cores
-    n_edges = 2 * n_pairs
+    # Spark tier: join/group keys are INTEGER node ids; labels stay
+    # STRINGS — the min(struct(-wt, nl)) tie-break is lexicographic on
+    # the label and must not change order. Same size-aware edge-cache
+    # packing as graph_pagerank (§14.5): 6 rounds × tiny stages × 32
+    # tasks is scheduler-bound locally; the clamp no-ops once edges
+    # outgrow the cores.
     k_parts = max(
         1,
         min(
             spark.sparkContext.defaultParallelism,
-            n_edges // PR_EDGE_ROWS_PER_PART + 1,
+            2 * n_pairs // PR_EDGE_ROWS_PER_PART + 1,
         ),
     )
-    inode_rel = (
-        ipair.select("a")
-        .unionAll(ipair.select(F.col("b").alias("a")))
-        .distinct()
-    )
-    n_nodes = inode_rel.count()
-    if n_nodes <= PR_DRIVER_MAX_NODES:
-        # r13: driver-held label vector (the graph_pagerank
-        # PR_DRIVER_MAX_NODES rationale — below the broadcast gate the
-        # vector ships whole every round anyway; holding it driver-side
-        # collapses 3 jobs/round to 1). The weighted argmax — integer
-        # cent sums, min(struct(-wt, label)) — runs entirely in the one
-        # per-round Spark aggregate; Python only applies the adopted
-        # labels to the dict (exact string assignment, no arithmetic).
-        # Join/group keys are INTEGER node ids and the edge cache is
-        # hash-partitioned by a, so BOTH aggregate levels reuse the
-        # cache partitioning (hashpartitioning(a) clusters (a, nl)
-        # too) and each round plans NO Exchange. Labels stay STRINGS —
-        # the min(struct(-wt, nl)) tie-break is lexicographic on the
-        # label and must not change order.
-        import pandas as pd
-
-        iedges = (
-            ipair.unionAll(
-                ipair.select(
-                    F.col("b").alias("a"), F.col("a").alias("b"), "w"
-                )
-            )
-            .repartition(k_parts, "a")
-            .persist()
-        )
-        iedges.count()
-        ids = sorted(r.a for r in inode_rel.collect())
-        ipair.unpersist()
-        node_list = [
-            ("c" if i % 2 else "s") + str(i // 2) for i in ids
-        ]
-        id_of = dict(zip(node_list, ids))
-        state = {nd: nd for nd in node_list}
-        for r in range(LPA_ROUNDS):
-            side_mod = 0 if r % 2 == 0 else 1  # 's' even, 'c' odd
-            ldf = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "b": [id_of[nd] for nd in node_list],
-                        "nl": [state[nd] for nd in node_list],
-                    }
-                )
-            )
-            adopted_df = (
-                iedges.filter(F.col("a") % 2 == side_mod)
-                .join(F.broadcast(ldf), "b")
-                .groupBy("a", "nl")
-                .agg(F.sum("w").cast("bigint").alias("wt"))
-                .groupBy("a")
-                .agg(
-                    F.min(
-                        F.struct((-F.col("wt")).alias("nw"), F.col("nl"))
-                    )
-                    .getField("nl")
-                    .alias("new_label")
-                )
-            )
-            if r == 0:
-                _dump_round_plan(adopted_df, "graph_label_prop")
-            adopted = adopted_df.toPandas()
-            for aid, nl in zip(adopted["a"], adopted["new_label"]):
-                nd = (
-                    ("c" if aid % 2 else "s") + str(int(aid) // 2)
-                )
-                if nd in state:
-                    state[nd] = nl
-        iedges.unpersist()
-        out = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "node": node_list,
-                    "label": [state[nd] for nd in node_list],
-                }
-            )
-        )
-        return out.select(
-            "node",
-            F.col("label").alias("community"),
-            F.substring("node", 1, 1).alias("kind"),
-        )
-    # distributed branch (> PR_DRIVER_MAX_NODES): derive the string
-    # relations from the int-keyed pair cache (one pass, identical
-    # values) and run the pre-r13 loop unchanged
-    _name = "concat(IF(pmod({c}, 2) = 0, 's', 'c'), CAST({c} DIV 2 AS STRING))"
     edges = (
         ipair.unionAll(
             ipair.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
-        )
-        .selectExpr(
-            _name.format(c="a") + " AS a",
-            _name.format(c="b") + " AS b",
-            "w",
         )
         .coalesce(k_parts)
         .persist()
@@ -1416,51 +1163,52 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = (
         edges.select(F.col("a").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("label"))
+        .select("node", _node_name_col("node").alias("label"))
         .localCheckpoint()
     )
-    # label vector broadcast below the pagerank gate: the EDGE list —
-    # the big side — never shuffles for the per-round label join
-    broadcast_labels = n_nodes <= PR_BROADCAST_MAX_NODES
     for r in range(LPA_ROUNDS):
-        side = "s" if r % 2 == 0 else "c"
-        nbr = labels.select(
-            F.col("node").alias("b"), F.col("label").alias("nl")
+        side_mod = 0 if r % 2 == 0 else 1  # 's' even, 'c' odd
+        # the label vector is broadcast (unconditional hint — see
+        # graph_pagerank), so the edge list never shuffles for the join
+        nbr = F.broadcast(
+            labels.select(F.col("node").alias("b"), F.col("label").alias("nl"))
         )
-        if broadcast_labels:
-            nbr = F.broadcast(nbr)
-        adopted = (
-            edges.filter(F.substring("a", 1, 1) == side)
+        cand = (
+            edges.filter(F.col("a") % 2 == side_mod)
             .join(nbr, "b")
             .groupBy("a", "nl")
             .agg(F.sum("w").cast("bigint").alias("wt"))
-            .groupBy("a")
-            .agg(
-                F.min(F.struct((-F.col("wt")).alias("nw"), F.col("nl")))
-                .getField("nl")
-                .alias("new_label")
+            .select(
+                F.col("a").alias("node"),
+                F.struct(
+                    F.lit(0).alias("keep"),
+                    (-F.col("wt")).alias("nw"),
+                    "nl",
+                ).alias("k"),
             )
-            .select(F.col("a").alias("node"), "new_label")
+        )
+        # the adopted label is min(struct(-wt, nl)) over a node's
+        # candidates; the current label rides along with keep = 1, so
+        # it wins only where no candidate exists (every node off this
+        # round's side) — one node-keyed aggregate, no second join
+        keep = labels.select(
+            "node",
+            F.struct(
+                F.lit(1).alias("keep"),
+                F.lit(0).cast("bigint").alias("nw"),
+                F.col("label").alias("nl"),
+            ).alias("k"),
         )
         labels = (
-            labels.join(adopted, "node", "left")
-            .select(
-                "node",
-                F.when(
-                    F.substring("node", 1, 1) == side,
-                    F.coalesce("new_label", "label"),
-                )
-                .otherwise(F.col("label"))
-                .alias("label"),
-            )
+            cand.unionAll(keep)
+            .groupBy("node")
+            .agg(F.min("k").getField("nl").alias("label"))
             .localCheckpoint()
         )
     edges.unpersist()
     return labels.select(
-        "node",
-        F.col("label").alias("community"),
-        F.substring("node", 1, 1).alias("kind"),
-    )
+        _node_name_col("node").alias("node"), F.col("label").alias("community")
+    ).select("node", "community", F.substring("node", 1, 1).alias("kind"))
 
 
 _DUCK_NATION_EDGES = """
@@ -2494,22 +2242,6 @@ MST_ROUNDS = 8  # Borůvka rounds unrolled in the oracle (measured
 # fixpoint 3/4/6 at sf0.001/0.01/0.1 — margin ≥ 2, pytest-pinned)
 MST_CC_ITERS = 34  # per-round CC Jacobi iterations in the oracle
 # (measured max 27 at sf0.1 — margin 7, pytest-pinned)
-# r14 tier gate (the graph_pagerank PR_LOCAL_MAX_EDGES shape): below
-# this directed pair count the WHOLE Borůvka loop replays in numpy on
-# the collected pair list — the per-round Spark argmin jobs collapse
-# to one Arrow collect. The per-component argmin min(struct(w, u, v))
-# is replayed as a lexsort on (w, u_rank, v_rank), where the ranks
-# index the lexicographically sorted node-name universe (pure-ASCII
-# names: numpy string sort ≡ Spark binary UTF8 order), so the unique
-# MSF's total order is bit-identical. Tier-parity pytest forces the
-# gate off and asserts row equality.
-MST_LOCAL_MAX_EDGES = _env_int("SPARK_GRAFT_MST_LOCAL_MAX_EDGES", 8_000_000)
-
-MST_UF_MAX_EDGES = 2_000_000  # driver union-find fast-path gate: the
-# accumulated forest is NODE-sized (≤ V−1 edges), so below this it
-# collects like pagerank's rank broadcast; above, the distributed
-# min-label loop runs (the PR_BROADCAST_MAX_NODES gate pattern)
-
 
 def _mst_oracle() -> str:
     """Unrolled relational Borůvka (round 13 — completes the graph
@@ -2523,11 +2255,11 @@ def _mst_oracle() -> str:
     previous round's labels; measured convergence ≤ 27 iterations at
     sf0.1 (margin pinned). Labels are internal: any algorithm yielding
     the same PARTITION yields the same cross-edge sets and per-block
-    argmins, which is why the engine's union-find fast path and this
-    Jacobi unroll agree exactly. Every CTE is MATERIALIZED — the
-    weight chain references each lab table three times and DuckDB
-    would otherwise re-inline it exponentially (the _qc_oracle
-    lesson)."""
+    argmins, which is why the engine's numpy union-find tier, its
+    Spark min-label loop and this Jacobi unroll agree exactly. Every
+    CTE is MATERIALIZED — the weight chain references each lab table
+    three times and DuckDB would otherwise re-inline it exponentially
+    (the _qc_oracle lesson)."""
     parts = [
         """medges AS MATERIALIZED (
     SELECT 'c' || o_custkey AS u, 's' || l_suppkey AS v,
@@ -2614,72 +2346,47 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured fixpoint 3/4/6 rounds at the three SFs (≤ MST_ROUNDS−2,
     margin-pinned).
 
-    Scale: the per-round cost is ONE join of the (persisted) edge
-    relation against the node-sized component map plus one
-    per-component argmin — both key on node/component ids, the
-    map-side-combinable shape; the edge relation never rewrites. The
-    accumulated forest is NODE-sized (≤ V−1 edges), so component
-    labels take the pagerank-style gate: below MST_UF_MAX_EDGES the
-    driver runs an exact union-find on the collected forest (entity-
-    scale, like the rank broadcast); above it, a distributed
-    min-label+pointer-jump loop computes the same partition (labels
-    are partition-invariant, so both paths agree bit-for-bit — the
-    fallback is exercised in pytest with the gate forced to 0).
-    Deterministic: integers and strings end to end, no floats
-    anywhere."""
-    # r13 optimization (the graph_pagerank shape): one persisted
-    # int-keyed pair cache (customer k → 2k+1, supplier k → 2k) —
-    # join/group keys are ints, while the argmin STRUCT keeps the
+    Scale: the graph_pagerank tiers. Below GRAPH_LOCAL_MAX_PAIRS the
+    whole Borůvka loop replays in numpy with a driver union-find over
+    one collect of the int pair list. Above it one int-keyed Spark loop
+    runs: per round ONE join of the (shrinking) cross-edge relation
+    against the broadcast node-sized component map plus one
+    per-component argmin — both key on int node/component ids, the
+    map-side-combinable shape — then _forest_components relabels the
+    accumulated forest with a distributed min-label loop. Component
+    labels are partition-invariant, so both tiers agree bit-for-bit
+    (pytest forces the gate to 0 and diffs them). Deterministic:
+    integers and strings end to end, no floats anywhere."""
+    # join/group keys are int node ids (customer k → 2k+1 = u side,
+    # supplier k → 2k = v side), while the argmin STRUCT keeps the
     # 'c…'/'s…' strings so the (w, u, v) total order (and thus the
     # unique MSF) is bit-identical to the oracle's.
-    li = t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    ipair = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_suppkey", "o_custkey")
-        .agg(
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("w")
-        )
-        .select(
-            (F.col("o_custkey") * 2 + 1).cast("int").alias("ui"),
-            (F.col("l_suppkey") * 2).cast("int").alias("vi"),
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("u"),
-            F.concat(F.lit("s"), F.col("l_suppkey")).alias("v"),
-            "w",
-        )
-        .persist()
-    )
-    n_pairs = ipair.count()
+    ipair, n_pairs = _int_trade_pairs(spark, sf_dir)
     if n_pairs == 0:
         # empty-graph guard (ADVICE r13)
         ipair.unpersist()
         return spark.createDataFrame(
             [], "u string, v string, w bigint, component string"
         )
-    if n_pairs <= MST_LOCAL_MAX_EDGES:
-        # r14 tier (see MST_LOCAL_MAX_EDGES): one Arrow collect of the
-        # INT columns only, then the SAME Borůvka rounds —
-        # per-component argmin over cross edges, both component sides,
-        # same-edge-picked-twice dedup, driver union-find — entirely
-        # in numpy/Python. The (w, u, v) total order is encoded ONCE
-        # as a global integer edge rank: string order of 'c<digits>'
-        # names is reproduced by the exact integer key _dec_key
-        # (pytest-pinned against str sort), edges are lexsorted once
-        # by (w, key(u), key(v)), and every per-round argmin becomes a
-        # plain np.minimum.at over int64 ranks — so the selected edge
-        # multiset and the final min-name component labels are
-        # bit-identical to the Spark-argmin tier below.
+    if n_pairs <= GRAPH_LOCAL_MAX_PAIRS:
+        # numpy tier: one Arrow collect of the int pair list, then
+        # the SAME Borůvka rounds — per-component argmin over cross
+        # edges, both component sides, same-edge-picked-twice dedup,
+        # driver union-find — entirely in numpy/Python. The (w, u, v)
+        # total order is encoded ONCE as a global integer edge rank:
+        # string order of 'c<digits>' names is reproduced by the exact
+        # integer key _dec_key (pytest-pinned against str sort), edges
+        # are lexsorted once by (w, key(u), key(v)), and every
+        # per-round argmin becomes a plain np.minimum.at over int64
+        # ranks — so the selected edge multiset and the final min-name
+        # component labels are bit-identical to the Spark tier below.
         import numpy as np
         import pandas as pd
 
-        pdf = ipair.select("ui", "vi", "w").toPandas()
+        pdf = ipair.toPandas()
         ipair.unpersist()
-        uiA = pdf["ui"].to_numpy(np.int64)
-        viA = pdf["vi"].to_numpy(np.int64)
+        uiA = pdf["b"].to_numpy(np.int64)
+        viA = pdf["a"].to_numpy(np.int64)
         we = pdf["w"].to_numpy(np.int64)
         # hash-based node indexing (see graph_pagerank)
         codes, uniq = pd.factorize(np.concatenate([uiA, viA]))
@@ -2743,15 +2450,12 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r not in min_key or kk < min_key[r]:
                 min_key[r] = kk
                 min_node[r] = k
-        def _nm(i: int) -> str:
-            return ("c" if i % 2 else "s") + str(i // 2)
-
-        lab_of_root = {r: _nm(int(ids[k])) for r, k in min_node.items()}
+        lab_of_root = {r: _node_name(int(ids[k])) for r, k in min_node.items()}
         return spark.createDataFrame(
             pd.DataFrame(
                 {
-                    "u": [_nm(int(uiA[i])) for i in sel_idx],
-                    "v": [_nm(int(viA[i])) for i in sel_idx],
+                    "u": [_node_name(int(uiA[i])) for i in sel_idx],
+                    "v": [_node_name(int(viA[i])) for i in sel_idx],
                     "w": [int(we[i]) for i in sel_idx],
                     "component": [
                         lab_of_root[ifind(int(uix[i]))] for i in sel_idx
@@ -2761,229 +2465,87 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "u", "v", F.col("w").cast("bigint").alias("w"), "component"
         )
-    inode_rel = (
-        ipair.select(F.col("ui").alias("i"))
-        .unionAll(ipair.select(F.col("vi").alias("i")))
+    # Spark tier: int-keyed edges carry their names for the argmin
+    edges = ipair.select(
+        F.col("b").alias("ui"),
+        F.col("a").alias("vi"),
+        _node_name_col("b").alias("u"),
+        _node_name_col("a").alias("v"),
+        "w",
+    ).localCheckpoint()
+    ipair.unpersist()
+    comp = (
+        edges.select(F.col("ui").alias("node"))
+        .unionAll(edges.select("vi"))
         .distinct()
-    )
-    n_nodes = inode_rel.count()
-    fast = n_nodes <= MST_UF_MAX_EDGES
-    if fast:
-        # Driver-held component map (node-sized, the pagerank
-        # PR_DRIVER_MAX_NODES rationale): per round ONE broadcast-join
-        # + argmin job over the cached pair relation — the component
-        # labels are partition-invariant, so int union-find roots
-        # serve as labels mid-round; min-STRING labels are computed
-        # once at the end exactly like before.
-        import pandas as pd
-
-        ids = [r.i for r in inode_rel.collect()]
-
-        def _nm(i: int) -> str:
-            return ("c" if i % 2 else "s") + str(i // 2)
-
-        iparent: dict[int, int] = {i: i for i in ids}
-
-        def ifind(x: int) -> int:
-            while iparent[x] != x:
-                iparent[x] = iparent[iparent[x]]
-                x = iparent[x]
-            return x
-
-        sel_fast: list[tuple] = []
-        comp_of = {i: i for i in ids}
-        for _round in range(MST_ROUNDS):
-            cdf = spark.createDataFrame(
-                pd.DataFrame(
-                    {"n": ids, "c": [comp_of[i] for i in ids]}
-                )
-            )
-            cu = F.broadcast(
-                cdf.select(F.col("n").alias("ui"), F.col("c").alias("cu"))
-            )
-            cv = F.broadcast(
-                cdf.select(F.col("n").alias("vi"), F.col("c").alias("cv"))
-            )
-            # non-cross edges drop in-flight (components only merge);
-            # both component sides argmin in ONE pass. Per-component
-            # winners come back via Arrow; the same-edge-picked-twice
-            # dedup happens in the driver set instead of a second
-            # shuffle (row order is irrelevant: the union-find
-            # PARTITION and the output multiset are order-invariant).
-            res_df = (
-                ipair.join(cu, "ui")
-                .join(cv, "vi")
-                .filter(F.col("cu") != F.col("cv"))
-                .select(
-                    F.explode(F.array("cu", "cv")).alias("c"),
-                    "u",
-                    "v",
-                    "w",
-                )
-                .groupBy("c")
-                .agg(F.min(F.struct("w", "u", "v")).alias("k"))
-                .select("k.u", "k.v", "k.w")
-            )
-            if _round == 0:
-                _dump_round_plan(res_df, "graph_mst")
-            res = res_df.toPandas()
-            new = {
-                (u, v, int(w))
-                for u, v, w in zip(res["u"], res["v"], res["w"])
-            }
-            if not new:
-                break
-            sel_fast.extend(new)
-            for ru, rv, _w in new:
-                a, b = int(ru[1:]) * 2 + 1, int(rv[1:]) * 2
-                ra, rb = ifind(a), ifind(b)
-                if ra != rb:
-                    iparent[ra] = rb
-            comp_of = {i: ifind(i) for i in ids}
-        ipair.unpersist()
-        if not sel_fast:
-            return spark.createDataFrame(
-                [], "u string, v string, w bigint, component string"
-            )
-        groups_f: dict[int, list[str]] = {}
-        for i in ids:
-            groups_f.setdefault(ifind(i), []).append(_nm(i))
-        lab_f: dict[str, str] = {}
-        for g in groups_f.values():
-            m = min(g)
-            for nm in g:
-                lab_f[nm] = m
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "u": [u for u, _, _ in sel_fast],
-                    "v": [v for _, v, _ in sel_fast],
-                    "w": [w for _, _, w in sel_fast],
-                    "component": [lab_f[u] for u, _, _ in sel_fast],
-                }
-            )
-        ).select(
-            "u", "v", F.col("w").cast("bigint").alias("w"), "component"
-        )
-    # distributed path (> MST_UF_MAX_EDGES): string relations derived
-    # from the pair cache, pre-r13 loop unchanged
-    edges = ipair.select("u", "v", "w").localCheckpoint()
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select("v"))
-        .distinct()
+        .select("node", F.col("node").alias("lab"))
         .localCheckpoint()
     )
-    ipair.unpersist()
-    comp = nodes.select("node", F.col("node").alias("lab")).localCheckpoint()
-    bcast = n_nodes <= PR_BROADCAST_MAX_NODES  # node-sized map: the
-    # pagerank broadcast gate — below it the edge relation never
-    # shuffles for the component join
-    sel: DataFrame | None = None  # distributed-path accumulator
+    sel: DataFrame | None = None  # accumulated forest
     for _ in range(MST_ROUNDS):
-        cu = comp.withColumnRenamed("node", "u").withColumnRenamed(
-            "lab", "cu"
+        # the node-sized component map is broadcast (unconditional
+        # hint — see graph_pagerank), so the edge relation never
+        # shuffles for the component join
+        cu = F.broadcast(
+            comp.select(F.col("node").alias("ui"), F.col("lab").alias("cu"))
         )
-        cv = comp.withColumnRenamed("node", "v").withColumnRenamed(
-            "lab", "cv"
+        cv = F.broadcast(
+            comp.select(F.col("node").alias("vi"), F.col("lab").alias("cv"))
         )
-        if bcast:
-            cu, cv = F.broadcast(cu), F.broadcast(cv)
         # non-cross edges can NEVER become cross again (components only
         # merge) — keep only cross edges for the next round, so the
         # per-round join shrinks monotonically
         cross = (
-            edges.join(cu, "u")
-            .join(cv, "v")
+            edges.join(cu, "ui")
+            .join(cv, "vi")
             .filter(F.col("cu") != F.col("cv"))
             .localCheckpoint()
         )
-        edges = cross.select("u", "v", "w")
+        edges = cross.select("ui", "vi", "u", "v", "w")
         # both component sides in ONE pass (a unionAll of two selects
-        # re-executes the join per branch); min(struct(w,u,v)) IS the
-        # argmin — the key carries the whole edge
+        # re-executes the join per branch); min(struct(w, u, v, …)) IS
+        # the argmin — the key carries the whole edge, and the int ids
+        # after (u, v) never decide a tie ((u, v) is unique)
         mins = (
             cross.select(
-                F.explode(F.array("cu", "cv")).alias("c"), "u", "v", "w"
+                F.explode(F.array("cu", "cv")).alias("c"),
+                "ui", "vi", "u", "v", "w",
             )
             .groupBy("c")
-            .agg(F.min(F.struct("w", "u", "v")).alias("k"))
-            .select("k.u", "k.v", "k.w")
+            .agg(F.min(F.struct("w", "u", "v", "ui", "vi")).alias("k"))
+            .select("k.ui", "k.vi", "k.u", "k.v", "k.w")
             .distinct()
+            .localCheckpoint()
         )
-        mins = mins.localCheckpoint()
         if mins.isEmpty():
             break
         sel = (
             mins if sel is None else sel.unionAll(mins).distinct()
         ).localCheckpoint()
-        comp = _forest_components(spark, nodes, sel, comp)
+        comp = _forest_components(sel, comp)
     if sel is None:
         return spark.createDataFrame(
             [], "u string, v string, w bigint, component string"
         )
-    return sel.join(
-        comp.withColumnRenamed("node", "u").withColumnRenamed(
-            "lab", "component"
-        ),
-        "u",
-    ).select("u", "v", "w", "component")
+    # the int labels mark the partition; each component's output label
+    # is its lexicographically least member name
+    names = comp.groupBy("lab").agg(
+        F.min(_node_name_col("node")).alias("component")
+    )
+    return (
+        sel.join(comp.select(F.col("node").alias("ui"), "lab"), "ui")
+        .join(names, "lab")
+        .select("u", "v", "w", "component")
+    )
 
 
-def _forest_components(
-    spark: SparkSession,
-    nodes: DataFrame,
-    forest: DataFrame,
-    warm: DataFrame,
-    uf_max_edges: int | None = None,
-) -> DataFrame:
-    """Exact CC min-labels of the accumulated forest — the graph_mst
-    gate: driver union-find below uf_max_edges (the forest is
-    node-sized; an entity-scale collect like pagerank's gated rank
-    broadcast), distributed Jacobi min-label + pointer-jump loop
-    above it (converges in O(log · diameter) small jobs; warm-started
+def _forest_components(forest: DataFrame, warm: DataFrame) -> DataFrame:
+    """Exact CC labels (min int node id) of the accumulated forest,
+    the graph_mst Spark tier's relabel step: a distributed Jacobi
+    min-label loop (converges in O(diameter) small jobs; warm-started
     from the previous round's labels, localCheckpoint per iteration).
-    Both paths compute the same partition with min labels, so results
-    are identical — only the access path differs."""
-    if uf_max_edges is None:  # resolved at call time: patchable in tests
-        uf_max_edges = MST_UF_MAX_EDGES
-    n_forest = forest.count()
-    if n_forest <= uf_max_edges:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        rows = forest.select("u", "v").collect()
-        for r in rows:
-            parent.setdefault(r["u"], r["u"])
-            parent.setdefault(r["v"], r["v"])
-        for r in rows:
-            ru, rv = find(r["u"]), find(r["v"])
-            if ru != rv:
-                parent[ru] = rv
-        groups: dict[str, list[str]] = {}
-        for n in parent:
-            groups.setdefault(find(n), []).append(n)
-        lab = {}
-        for g in groups.values():
-            m = min(g)
-            for n in g:
-                lab[n] = m
-        labeled = spark.createDataFrame(
-            list(lab.items()), "node string, lab string"
-        )
-        return (
-            nodes.join(labeled, "node", "left")
-            .select(
-                "node",
-                F.coalesce("lab", F.col("node")).alias("lab"),
-            )
-            .localCheckpoint()
-        )
+    Labels only mark the partition; graph_mst names each component
+    by its least member name at the output."""
     # Neighbor-min propagation ONLY (the proven _min_label_components
     # shape, warm-started so propagation crosses just the newly merged
     # boundaries — measured convergence ≤ 9 iterations/round even on
@@ -2996,8 +2558,8 @@ def _forest_components(
     # Pathological diameters would call for large-star/small-star
     # (same join primitives, provably O(log n) rounds).
     sym = forest.select(
-        F.col("u").alias("n"), F.col("v").alias("o")
-    ).unionAll(forest.select(F.col("v").alias("n"), F.col("u").alias("o")))
+        F.col("ui").alias("n"), F.col("vi").alias("o")
+    ).unionAll(forest.select(F.col("vi").alias("n"), F.col("ui").alias("o")))
     sym = sym.localCheckpoint()
     lab = warm
     for _ in range(400):  # safety cap far above measured ≤ 9

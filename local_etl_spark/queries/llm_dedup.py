@@ -49,7 +49,7 @@ COSINE_T = 0.4
 
 # llm_dedup_embed's exact all-pairs path is O(n²) by construction —
 # above this vector count it routes through multi-probe IVF cell
-# blocking instead (VERDICT r5 #4; mirrors graph.PR_BROADCAST_MAX_NODES).
+# blocking instead (VERDICT r5 #4).
 # Every sf test corpus (≤2k vectors) sits far below the gate.
 # All-pairs gate: measured at the old 20_000 boundary, exact all-pairs
 # took 116 s on 32 cores (200M interpreted dot folds — quadratic by
@@ -763,9 +763,8 @@ def llm_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity is preserved. Every sf corpus (≤2k vectors) takes this path,
     so the oracle and the pair set are byte-unchanged by the gate.
 
-    GATED SCALE PATH (n above the gate — VERDICT r5 #4, mirroring
-    graph_pagerank's PR_BROADCAST_MAX_NODES): an O(n²) broadcast
-    nested-loop over 100 TB of vectors is a non-starter, so large
+    GATED SCALE PATH (n above the gate — VERDICT r5 #4): an O(n²)
+    broadcast nested-loop over 100 TB of vectors is a non-starter, so large
     corpora route through trained spherical-kmeans cell blocking with
     EMBED_CELL_PROBES-way multi-probe (each vector lands in its top-P
     most-similar cells; a pair is compared iff the two vectors share a

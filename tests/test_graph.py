@@ -3,8 +3,15 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
-from local_etl_spark.queries.graph import DAMPING, N_ITER, graph_pagerank, trade_edges
+from local_etl_spark.queries.graph import (
+    DAMPING,
+    LPA_ROUNDS,
+    N_ITER,
+    graph_pagerank,
+    trade_edges,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -567,37 +574,8 @@ def test_mst_equals_kruskal_and_networkx(spark):
             assert r["component"] == comp_of[r["u"]]
 
 
-def test_mst_distributed_fallback_matches_fast_path(spark, monkeypatch):
-    """Force the gates to 0 so the Spark-argmin fast path and then the
-    distributed min-label loop run instead of the r14 numpy tier —
-    results must be IDENTICAL (labels are partition-invariant; all
-    paths compute min labels of the same unique forest). NOTE: the r14
-    MST_LOCAL_MAX_EDGES tier sits in FRONT of MST_UF_MAX_EDGES, so the
-    distributed leg must zero both."""
-    import local_etl_spark.queries.graph as G
-    from local_etl_spark.registry import get
-
-    sf = "/root/testdata/sf0.001"
-    fast = {
-        (r["u"], r["v"], r["w"], r["component"])
-        for r in get("graph_mst").fn(spark, sf).collect()
-    }
-    monkeypatch.setattr(G, "MST_LOCAL_MAX_EDGES", 0)
-    mid = {
-        (r["u"], r["v"], r["w"], r["component"])
-        for r in get("graph_mst").fn(spark, sf).collect()
-    }
-    assert fast == mid
-    monkeypatch.setattr(G, "MST_UF_MAX_EDGES", 0)
-    slow = {
-        (r["u"], r["v"], r["w"], r["component"])
-        for r in get("graph_mst").fn(spark, sf).collect()
-    }
-    assert fast == slow
-
-
 def test_dec_key_matches_decimal_string_order():
-    """_dec_key (the graph driver tiers' integer stand-in for Spark's
+    """_dec_key (the graph numpy tiers' integer stand-in for Spark's
     binary-UTF8 string comparisons on node names) must induce EXACTLY
     the lexicographic order of str(n) — boundary values + randomized
     sweep."""
@@ -621,36 +599,83 @@ def test_dec_key_matches_decimal_string_order():
         assert seen.setdefault(kk, v) == v
 
 
-def test_graph_driver_tier_parity(spark, monkeypatch):
-    """ADVICE r13 (medium) + the r14 local tiers: every gate tier of
-    graph_pagerank / graph_label_prop must produce identical rows —
-    the r14 numpy replay, the r13 driver-vector loop, the broadcast
-    loop, and the full shuffle loop. The distributed fallbacks contain
-    code (the _name selectExpr reconstruction) that no shipped SF
-    reaches; this forces each gate to 0 in turn and diffs against the
-    default path."""
+@pytest.mark.parametrize(
+    "name", ["graph_pagerank", "graph_label_prop", "graph_mst"]
+)
+def test_graph_distributed_tier_parity(spark, monkeypatch, name):
+    """Both tiers of each iterative graph query — the numpy replay and
+    the int-keyed Spark loop, which no shipped SF reaches by default —
+    must produce identical rows: force GRAPH_LOCAL_MAX_PAIRS to 0 and
+    diff against the default path (mst: component labels are
+    partition-invariant, so both tiers name the same unique forest)."""
     import local_etl_spark.queries.graph as G
     from local_etl_spark.registry import get
 
-    for name in ("graph_pagerank", "graph_label_prop"):
-        fn = get(name).fn
-        sf = "/root/testdata/sf0.01"
-        base = sorted(map(tuple, fn(spark, sf).collect()))
-        monkeypatch.setattr(G, "PR_LOCAL_MAX_EDGES", 0)
-        r13_tier = sorted(map(tuple, fn(spark, sf).collect()))
-        assert r13_tier == base, f"{name}: r13 driver tier diverges"
-        # the deep distributed tiers are slower per round — sf0.001
-        sf = "/root/testdata/sf0.001"
-        monkeypatch.setattr(G, "PR_LOCAL_MAX_EDGES", 8_000_000)
-        base_small = sorted(map(tuple, fn(spark, sf).collect()))
-        monkeypatch.setattr(G, "PR_LOCAL_MAX_EDGES", 0)
-        monkeypatch.setattr(G, "PR_DRIVER_MAX_NODES", 0)
-        bcast = sorted(map(tuple, fn(spark, sf).collect()))
-        assert bcast == base_small, f"{name}: broadcast tier diverges"
-        monkeypatch.setattr(G, "PR_BROADCAST_MAX_NODES", 0)
-        shuffle = sorted(map(tuple, fn(spark, sf).collect()))
-        assert shuffle == base_small, f"{name}: shuffle tier diverges"
-        monkeypatch.undo()
+    fn = get(name).fn
+    base = sorted(map(tuple, fn(spark, SF).collect()))
+    monkeypatch.setattr(G, "GRAPH_LOCAL_MAX_PAIRS", 0)
+    spark_tier = sorted(map(tuple, fn(spark, SF).collect()))
+    assert spark_tier == base
+
+
+def _round_joins(plan) -> list[tuple[str, list[str]]]:
+    """(operator name, leaf operators of the broadcast build side) for
+    each join in a physical plan, walking operator children only — a
+    cached relation's build plan (behind an InMemoryTableScan leaf) is
+    not part of the round's plan."""
+
+    def children(p):
+        ch = p.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    def leaves(p):
+        kids = children(p)
+        return [p.nodeName()] if not kids else [x for c in kids for x in leaves(c)]
+
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    joins, stack = [], [plan]
+    while stack:
+        p = stack.pop()
+        if "Join" in p.nodeName():
+            build = []
+            if p.nodeName() == "BroadcastHashJoin":
+                side = 0 if p.buildSide().toString() == "BuildLeft" else 1
+                build = leaves(children(p)[side])
+            joins.append((p.nodeName(), build))
+        stack.extend(children(p))
+    return joins
+
+
+@pytest.mark.parametrize(
+    "name, rounds", [("graph_pagerank", N_ITER), ("graph_label_prop", LPA_ROUNDS)]
+)
+def test_graph_round_join_broadcasts(spark, monkeypatch, name, rounds):
+    """The Spark tier's per-round join of the edge list with the
+    node-sized rank / label vector must plan a BroadcastHashJoin that
+    builds the checkpointed vector, so the edge list never shuffles or
+    broadcasts for it. Each round ends in a localCheckpoint; record
+    the physical plan of every checkpointed frame and check the join
+    operators of the rounds."""
+    from pyspark.sql.classic.dataframe import DataFrame as CDF
+
+    import local_etl_spark.queries.graph as G
+    from local_etl_spark.registry import get
+
+    plans = []
+    checkpoint = CDF.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        plans.append(_round_joins(self._jdf.queryExecution().executedPlan()))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(CDF, "localCheckpoint", recording_checkpoint)
+    monkeypatch.setattr(G, "GRAPH_LOCAL_MAX_PAIRS", 0)
+    get(name).fn(spark, SF).collect()
+    round_joins = [joins for joins in plans if joins]
+    assert len(round_joins) == rounds, plans
+    for joins in round_joins:
+        assert joins == [("BroadcastHashJoin", ["Scan ExistingRDD"])], joins
 
 
 def test_graph_empty_corpus_guard(spark, tmp_path):

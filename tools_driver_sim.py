@@ -46,12 +46,12 @@ def _guarded_collect(self):
 
 _CDF.collect = _guarded_collect
 
-# r14: the graph driver tiers collect the GATED pair relation via
+# r14: the graph numpy tiers collect the GATED pair relation via
 # toPandas (Arrow path — bypasses collect()). Those collects are
-# corpus-shaped but bounded by an absolute env-tunable gate
-# (PR_LOCAL_MAX_EDGES / MST_LOCAL_MAX_EDGES, default 8M rows ≈ 160 MB;
-# past it the distributed tiers run), so the sim enforces that bound
-# rather than the model-sized one.
+# corpus-shaped but bounded by an absolute gate
+# (graph.GRAPH_LOCAL_MAX_PAIRS, 8M rows ≈ 160 MB; past it the int-keyed
+# Spark tier runs), so the sim enforces that bound rather than the
+# model-sized one.
 TOPANDAS_BOUND = 8_000_000
 _topandas_orig = _CDF.toPandas
 

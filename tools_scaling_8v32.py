@@ -4,14 +4,15 @@ The sf0.1 bench cannot demonstrate parallelism (the per-job scheduler
 floor dominates; 8 cores beats 32 on most entries). This tool times
 the heavy DISTRIBUTED machinery at sf1 under both core counts in
 separate processes and records the 32v8 speedup per entry. The graph
-queries' driver-local tiers are core-count-insensitive BY DESIGN (the
-whole point is removing distributed overhead at model scale), so for
-the graph loops the env-tunable gates are forced to the distributed
-tiers — the regime a real cluster runs — while the dedup/sql entries
-run their default (distributed) paths.
+queries' numpy-local tier is core-count-insensitive BY DESIGN (the
+whole point is removing distributed overhead at model scale), so the
+child process sets graph.GRAPH_LOCAL_MAX_PAIRS to 0 and the graph
+loops run their int-keyed Spark tier — the regime a real cluster runs
+— while the dedup/sql entries run their default (distributed) paths.
 
 Usage: python tools_scaling_8v32.py [sf1_dir]
-Writes SCALE_8v32_r14.json.
+Writes SCALE_8v32.json (SCALE_8v32_r14.json is the round-14 run, made
+with the earlier four-tier graph ladder).
 """
 
 from __future__ import annotations
@@ -42,6 +43,8 @@ sys.path.insert(0, {repo!r})
 from local_etl_spark.session import get_spark
 from local_etl_spark.catalog import TABLES, table
 from local_etl_spark.registry import all_queries
+import local_etl_spark.queries.graph as graph
+graph.GRAPH_LOCAL_MAX_PAIRS = 0  # graph loops on their Spark tier
 spark = get_spark("scale-8v32", cpus={cpus})
 spark.sparkContext.setLogLevel("ERROR")
 sf = {sf!r}
@@ -64,11 +67,6 @@ print("RESULT " + json.dumps(out))
 def run(cpus: int) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cpus)
-    # force the graph loops onto their DISTRIBUTED tiers (broadcast
-    # regime — the real-cluster shape below the broadcast gate)
-    env["SPARK_GRAFT_PR_LOCAL_MAX_EDGES"] = "0"
-    env["SPARK_GRAFT_PR_DRIVER_MAX_NODES"] = "0"
-    env["SPARK_GRAFT_MST_LOCAL_MAX_EDGES"] = "0"
     code = CHILD.format(repo=str(REPO), cpus=cpus, sf=SF1, queries=QUERIES)
     p = subprocess.run(
         [sys.executable, "-c", code],
@@ -115,7 +113,7 @@ def main():
     st1, mt1 = calib()
     out = {
         "sf1_dir": SF1,
-        "forced_tiers": "PR_LOCAL=0 PR_DRIVER=0 MST_LOCAL=0 (graph loops on the distributed broadcast tier)",
+        "forced_tiers": "GRAPH_LOCAL_MAX_PAIRS=0 (graph loops on the int-keyed Spark tier, broadcast vector)",
         "cpus8": r8,
         "cpus32": r32,
         "speedup_32v8": {
@@ -125,7 +123,7 @@ def main():
         "calib_mt": [mt0, mt1],
         "wall_clock": time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime()),
     }
-    (REPO / "SCALE_8v32_r14.json").write_text(json.dumps(out, indent=1))
+    (REPO / "SCALE_8v32.json").write_text(json.dumps(out, indent=1))
     print(json.dumps(out, indent=1))
 
 
